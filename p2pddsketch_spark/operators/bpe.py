@@ -84,7 +84,9 @@ def _train(df: DataFrame, k: int, text_col: str, need_final: bool = True):
         from p2pddsketch_spark.errors import ParamError
         raise ParamError(f"k must be >= 1, got {k}")
     base = word_symbol_table(df, text_col).persist()
-    syms, depth = base, 0
+    # whether syms is an eager checkpoint: round 0's table is only
+    # persisted (and unpersisted below), each round's select is lazy
+    syms, depth, materialized = base, 0, False
     merges = []
     for it in range(1, k + 1):
         best = (_pair_counts(syms)
@@ -99,14 +101,15 @@ def _train(df: DataFrame, k: int, text_col: str, need_final: bool = True):
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
                       F.lit(f" {l}{r} ")).alias("s"))
         depth += 1
+        materialized = False
         if depth >= _CHECKPOINT_EVERY:
             syms = syms.localCheckpoint(eager=True)
             base.unpersist()
-            base, depth = syms, 0
+            base, depth, materialized = syms, 0, True
     if not need_final:
         base.unpersist()
         return merges, None
-    if depth > 0 or syms is base:
+    if not materialized:
         syms = syms.localCheckpoint(eager=True)
     base.unpersist()
     return merges, syms

@@ -8,11 +8,17 @@ Pipeline shape (the "two shuffle boundaries" of SURVEY.md §3.1):
            (input partition × spec × group), built from whole Arrow
            batches with numpy — zero per-row Python, zero shuffle of raw
            data (this is what makes it work at 10^12 rows: only sketch
-           blobs ever cross the wire)
-  stage 2  groupBy(name, group, salt).applyInPandas(merge) — salted
+           blobs ever cross the wire). Sketches whose state depends only
+           on the summed (value, count) multiset (`BATCH_INVARIANT`:
+           HLL, CMS, Bloom, theta, counting Bloom) are fed once per task
+           from summed per-batch counts; every other family is fed per
+           batch
+  stage 2  groupBy(name, group, salt).applyInArrow(merge) — salted
            partial merge; salt = partition_id % salt_buckets bounds any
-           single reducer's fan-in regardless of input partition count
-  stage 3  groupBy(name, group).applyInPandas(merge) — final merge of
+           single reducer's fan-in regardless of input partition count.
+           `build_sketches_from_files` runs it only when stage 1 has more
+           tasks than salt_buckets: otherwise each salt holds one partial
+  stage 3  groupBy(name, group).applyInArrow(merge) — final merge of
            ≤ salt_buckets blobs per key
 
 Merging is deterministic: blobs are sorted lexicographically before the
@@ -65,8 +71,7 @@ __all__ = ["SketchSpec", "scalar_extractor", "array_extractor",
            "build_sketches", "build_partials", "merge_partials",
            "build_sketches_from_files", "build_partials_from_files",
            "parquet_file_list", "collect_sketches", "merge_blobs",
-           "final_sketches", "collect_and_merge_partials",
-           "sketch_from_bytes", "SKETCH_TYPES", "EMPTY_MARKER"]
+           "final_sketches", "sketch_from_bytes", "SKETCH_TYPES", "EMPTY_MARKER"]
 
 # sketch_name of the zero-row marker a stage-1 task emits when its
 # partition contained no rows: the row carries lineage (partition_id →
@@ -284,29 +289,94 @@ def array_extractor(column: str) -> Callable[[pa.RecordBatch], np.ndarray]:
 _BINCOUNT_MAX = 1 << 24
 
 
-def _unique_counts(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(uniques, counts) — np.bincount fast path for narrow-range int
-    ids (token vocabularies): O(n) sequential writes into an L2-resident
-    array instead of an O(n log n) sort. The sort path's random-access
-    traffic saturates memory bandwidth when 32 executor threads run it
-    concurrently; bincount keeps stage 1 compute-bound. The range guard
-    is computed in Python ints (an int64-extreme vmin/vmax pair must not
-    wrap) and the count array is sized by the RANGE via a vmin shift, so
-    a narrow band of high-offset (or negative) ids stays on the fast
-    path instead of allocating vmax entries or falling back to the sort."""
+def _dense_counts(vals: np.ndarray) -> tuple[int, np.ndarray] | None:
+    """(offset, counts) with counts[i] = occurrences of offset + i — the
+    np.bincount fast path for narrow-range int ids (token vocabularies):
+    O(n) sequential writes into an L2-resident array instead of an
+    O(n log n) sort. The sort path's random-access traffic saturates
+    memory bandwidth when 32 executor threads run it concurrently;
+    bincount keeps stage 1 compute-bound. The range guard is computed in
+    Python ints (an int64-extreme vmin/vmax pair must not wrap) and the
+    count array is sized by the RANGE via a vmin shift, so a narrow band
+    of high-offset (or negative) ids stays on the fast path instead of
+    allocating vmax entries or falling back to the sort. None when the
+    values are off the fast path (floats, wide ranges, empty)."""
     if vals.size and np.issubdtype(vals.dtype, np.integer):
         vmin, vmax = vals.min(), vals.max()
         rng = int(vmax) - int(vmin)
         if rng < max(vals.size * 4, 1 << 16):
             if vmin >= 0 and vmax < _BINCOUNT_MAX:
-                c = np.bincount(vals)  # small ids: no shift copy needed
-                uv = np.flatnonzero(c)
-                return uv.astype(np.int64), c[uv].astype(np.int64)
-            c = np.bincount(vals - vmin)
-            uv = np.flatnonzero(c)
-            return (uv + np.int64(vmin)).astype(np.int64), \
-                c[uv].astype(np.int64)
-    return np.unique(vals, return_counts=True)
+                # small ids: no shift copy needed
+                return int(vmin), np.bincount(vals)[vmin:]
+            return int(vmin), np.bincount(vals - vmin)
+    return None
+
+
+def _nonzero_counts(offset: int, counts: np.ndarray
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """(uniques, counts) of a `_dense_counts` array."""
+    uv = np.flatnonzero(counts)
+    return uv + np.int64(offset), counts[uv].astype(np.int64)
+
+
+def _unique_counts(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(uniques, counts) — via `_dense_counts` when the ids are narrow,
+    else the sort."""
+    dense = _dense_counts(vals)
+    if dense is None:
+        return np.unique(vals, return_counts=True)
+    return _nonzero_counts(*dense)
+
+
+# Most (value, count) entries one stage-1 task accumulates for its
+# BATCH_INVARIANT sketches before feeding them (2^22 int64 = 32 MB).
+# Flush points cannot change those sketches, so this only bounds memory.
+_TASK_COUNTS_MAX = 1 << 22
+
+
+class _TaskCounts:
+    """Per-task (value → count) accumulators, one per (extractor, group),
+    for sketches whose state depends only on the summed (value, count)
+    multiset (`BATCH_INVARIANT`): each batch's bincount is added here and
+    the sketches hash the task's vocabulary once at `flush`, instead of
+    once per (Arrow batch × group). An accumulator spans the union of its
+    batches' value ranges; when the total would pass `cap` every
+    accumulator is flushed first."""
+
+    def __init__(self, cap: int) -> None:
+        self.cap, self.size = cap, 0
+        # (extractor key, group key) -> [offset, counts, sketches]
+        self.slots: dict[tuple, list] = {}
+
+    def add(self, slot: tuple, sketches: list, offset: int,
+            counts: np.ndarray) -> None:
+        cur = self.slots.get(slot)
+        if cur is None:
+            grow = counts.size
+        else:
+            lo = min(cur[0], offset)
+            hi = max(cur[0] + cur[1].size, offset + counts.size)
+            grow = hi - lo - cur[1].size
+        if self.size and self.size + grow > self.cap:
+            self.flush()
+            cur, grow = None, counts.size
+        self.size += grow
+        if cur is None:
+            self.slots[slot] = [offset, counts.astype(np.int64), sketches]
+            return
+        if grow:
+            wide = np.zeros(hi - lo, np.int64)
+            wide[cur[0] - lo:cur[0] - lo + cur[1].size] = cur[1]
+            cur[0], cur[1] = lo, wide
+        cur[1][offset - cur[0]:offset - cur[0] + counts.size] += counts
+
+    def flush(self) -> None:
+        for offset, counts, sketches in self.slots.values():
+            uv, uc = _nonzero_counts(offset, counts)
+            for st in sketches:
+                st.update_batch(uv, uc)
+        self.slots.clear()
+        self.size = 0
 
 
 @dataclass
@@ -349,17 +419,23 @@ def _make_stage1(specs: list[SketchSpec], group_cols: tuple[str, ...],
                  else pa.string())
         for f in out_schema.fields
     ])
+    # read here, on the driver, so the cap ships with the stage closure
+    counts_cap = _TASK_COUNTS_MAX
 
-    def _update_all(states, specs_idx, key, batch):
+    def _update_all(states, task_counts, key, batch):
         """Update every spec's sketch from one (sub-)batch. Extraction and
         per-batch pre-aggregation (unique + counts) are shared across specs
         reading the same column: HLL/Bloom are set-semantics and CMS/DDS/
         t-digest are weight-exact, so feeding (uniques, counts) is
-        equivalent to raw values but ~vocab/batch_len cheaper."""
+        equivalent to raw values but ~vocab/batch_len cheaper. Sketches
+        marked BATCH_INVARIANT go further when the batch is on the bincount
+        fast path: its counts join the task's accumulator and the sketch is
+        fed once per task (`_TaskCounts`)."""
         extracted: dict[str, np.ndarray] = {}
+        dense: dict[str, tuple[int, np.ndarray] | None] = {}
         uniqued: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for si in specs_idx:
-            spec = specs[si]
+        deferred: dict[str, list] = {}
+        for si, spec in enumerate(specs):
             ekey = getattr(spec.extractor, "key", None) or id(spec.extractor)
             if ekey not in extracted:
                 extracted[ekey] = spec.extractor(batch)
@@ -369,11 +445,20 @@ def _make_stage1(specs: list[SketchSpec], group_cols: tuple[str, ...],
                 st = states[(si, key)] = spec.factory()
             if getattr(st, "NEEDS_RAW", False):
                 st.update_batch(vals)
-            else:
-                if ekey not in uniqued:
-                    uniqued[ekey] = _unique_counts(vals)
-                uv, uc = uniqued[ekey]
-                st.update_batch(uv, uc.astype(np.int64))
+                continue
+            if ekey not in dense:
+                dense[ekey] = _dense_counts(vals)
+            if dense[ekey] is not None and getattr(st, "BATCH_INVARIANT", False):
+                deferred.setdefault(ekey, []).append(st)
+                continue
+            if ekey not in uniqued:
+                uniqued[ekey] = (np.unique(vals, return_counts=True)
+                                 if dense[ekey] is None
+                                 else _nonzero_counts(*dense[ekey]))
+            uv, uc = uniqued[ekey]
+            st.update_batch(uv, uc.astype(np.int64))
+        for ekey, sketches in deferred.items():
+            task_counts.add((ekey, key), sketches, *dense[ekey])
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -381,15 +466,15 @@ def _make_stage1(specs: list[SketchSpec], group_cols: tuple[str, ...],
         pid = TaskContext.get().partitionId() if TaskContext.get() else 0
         salt = pid % salt_buckets
         t0 = time.monotonic()
-        all_idx = list(range(len(specs)))
         # (spec_idx, group_key_tuple) -> sketch
         states: dict[tuple, object] = {}
+        task_counts = _TaskCounts(counts_cap)
         # group_key_tuple -> rows contributing to that group (lineage)
         rows_by_key: dict[tuple, int] = {}
         for batch in batches:
             if not group_cols:
                 rows_by_key[()] = rows_by_key.get((), 0) + batch.num_rows
-                _update_all(states, all_idx, (), batch)
+                _update_all(states, task_counts, (), batch)
             else:
                 gcols = [batch.column(c).to_numpy(zero_copy_only=False)
                          for c in group_cols]
@@ -422,7 +507,8 @@ def _make_stage1(specs: list[SketchSpec], group_cols: tuple[str, ...],
                     sub = sorted_batch.slice(start, int(counts[gi]))
                     start += int(counts[gi])
                     rows_by_key[key] = rows_by_key.get(key, 0) + int(counts[gi])
-                    _update_all(states, all_idx, key, sub)
+                    _update_all(states, task_counts, key, sub)
+        task_counts.flush()
         secs = time.monotonic() - t0
         if not states:
             # zero-row partition: emit the lineage marker so checkpoint
@@ -680,17 +766,24 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
                              schema=out_schema)
 
 
-def merge_partials(partials: DataFrame, group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Stages 2+3: salted partial merge, then final merge per (name, group)."""
+def _merge(partials: DataFrame, group_cols: tuple[str, ...],
+           salted: bool) -> DataFrame:
+    """Final merge per (group, name), after the salted level when
+    `salted` — the one merge path behind `merge_partials` and
+    `build_sketches_from_files`."""
     partials = partials.where(F.col("sketch_name") != EMPTY_MARKER)
     out_schema = partials.schema
-    g2 = list(group_cols) + ["sketch_name", "salt"]
-    stage2 = partials.groupBy(*g2).applyInArrow(
-        _merge_fn(out_schema, group_cols, final=False), schema=out_schema)
-    g3 = list(group_cols) + ["sketch_name"]
-    stage3 = stage2.groupBy(*g3).applyInArrow(
+    keys = list(group_cols) + ["sketch_name"]
+    if salted:
+        partials = partials.groupBy(*keys, "salt").applyInArrow(
+            _merge_fn(out_schema, group_cols, final=False), schema=out_schema)
+    return partials.groupBy(*keys).applyInArrow(
         _merge_fn(out_schema, group_cols, final=True), schema=out_schema)
-    return stage3
+
+
+def merge_partials(partials: DataFrame, group_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Stages 2+3: salted partial merge, then final merge per (name, group)."""
+    return _merge(partials, group_cols, salted=True)
 
 
 def build_sketches(df: DataFrame, specs: list[SketchSpec],
@@ -708,11 +801,19 @@ def build_sketches_from_files(spark: SparkSession, path: str,
                               salt_buckets: int = 32,
                               files_per_task: int = 1,
                               batch_size: int = 2048) -> DataFrame:
-    """Full pipeline over a parquet directory via the file-list fast path."""
+    """Full pipeline over a parquet directory via the file-list fast path.
+
+    The salt is `partition_id % salt_buckets`, so when stage 1 has at most
+    `salt_buckets` tasks every (group, name, salt) key holds exactly one
+    partial and the salted level would only re-serialize it behind a
+    shuffle: the merge is then the final level alone (one exchange).
+    Stage 1 here is a mapInArrow over `spark.range`, whose partition
+    count is known from the plan without running a job."""
     paths = parquet_file_list(path)
     partials = build_partials_from_files(spark, paths, specs, group_cols,
                                          salt_buckets, files_per_task, batch_size)
-    return merge_partials(partials, group_cols)
+    return _merge(partials, group_cols,
+                  salted=partials.rdd.getNumPartitions() > salt_buckets)
 
 
 def final_sketches(partials: DataFrame, group_cols: tuple[str, ...] = (),
@@ -763,18 +864,6 @@ def _merge_partial_rows(rows, group_cols: tuple[str, ...]) -> dict:
     for key, blobs in grouped.items():
         out[key if len(key) > 1 else key[0]] = sketch_from_bytes(merge_blobs(blobs))
     return out
-
-
-def collect_and_merge_partials(partials: DataFrame,
-                               group_cols: tuple[str, ...] = ()) -> dict:
-    """Driver-side final merge: collect the (tiny) stage-1 partial blobs
-    and fold them locally — {(group..., name): sketch}. The right call
-    when partials number in the thousands (interactive queries); the
-    shuffle merge tree (`merge_partials`) is for the 10^5+-partial runs
-    where even blob traffic should stay distributed."""
-    return _merge_partial_rows(
-        partials.select(*group_cols, "sketch_name", "sketch").collect(),
-        group_cols)
 
 
 def collect_sketches(sketch_df: DataFrame, group_cols: tuple[str, ...] = ()) -> dict:

@@ -1248,9 +1248,10 @@ def q_sketch_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.sum("bloom_hits"), F.sum("cbf_hits")).collect()[0])
     bloom_hits = hits_row[0] or 0
     cbf_hits = hits_row[1] or 0
-    # (bloom's n_added is NOT here: SET_SEMANTICS sketches get per-batch
-    # pre-uniqued input from the harness, so that counter depends on
-    # batch boundaries — only layout-invariant values qualify)
+    # (bloom's n_added is NOT here: the harness feeds BATCH_INVARIANT
+    # sketches pre-uniqued counts once per stage-1 task or accumulator
+    # flush, so that counter depends on task and flush boundaries — only
+    # layout-invariant values qualify)
     rows = [
         ("bloom_hits_on_inserted", float(bloom_hits)),
         ("cbf_hits_after_delete", float(cbf_hits)),

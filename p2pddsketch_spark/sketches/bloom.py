@@ -18,6 +18,12 @@ _MAGIC = b"BLM1"
 
 
 class BloomFilter:
+    """k-hash bit array. `n_added` counts the values passed to
+    `update_batch`, so it is not a property of the set: the harness feeds
+    (unique, count) pairs once per stage-1 task, or per accumulator flush
+    when a task's vocabulary passes its cap, so `n_added` depends on task
+    and flush boundaries. `bits` does not."""
+
     __slots__ = ("m_bits", "k", "seed", "bits", "n_added")
 
     def __init__(self, m_bits: int = 1 << 20, k: int = 5, seed: int = 0) -> None:
@@ -45,7 +51,9 @@ class BloomFilter:
         with np.errstate(over="ignore"):
             return ((h1[None, :] + i * h2[None, :]) % np.uint64(self.m_bits)).astype(np.int64)
 
-    SET_SEMANTICS = True  # duplicates don't change state
+    # state depends only on the summed (value, count) multiset, not on how
+    # update_batch calls split it: the harness feeds it once per task
+    BATCH_INVARIANT = True
 
     def update_batch(self, values: np.ndarray, weights=None) -> "BloomFilter":
         v = np.asarray(values).astype(np.int64).ravel()

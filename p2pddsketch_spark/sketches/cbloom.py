@@ -81,6 +81,9 @@ class CountingBloomFilter:
                     ).astype(np.int64)
 
     NEEDS_RAW = False  # weight-linear: (uniques, counts) == raw values
+    # state depends only on the summed (value, count) multiset, not on how
+    # update_batch calls split it: the harness feeds it once per task
+    BATCH_INVARIANT = True
 
     def _check_range(self) -> None:
         # int64 accumulation never wraps for any realistic stream

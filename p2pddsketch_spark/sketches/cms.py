@@ -20,6 +20,10 @@ _MAGIC = b"CMS1"
 class CountMinSketch:
     __slots__ = ("depth", "width", "seed", "table", "total")
 
+    # state depends only on the summed (value, count) multiset, not on how
+    # update_batch calls split it: the harness feeds it once per task
+    BATCH_INVARIANT = True
+
     def __init__(self, depth: int = 5, width: int = 16384, seed: int = 0) -> None:
         if depth < 1 or width < 2:
             raise ValueError("depth >= 1 and width >= 2 required")

@@ -79,7 +79,9 @@ class HyperLogLog:
         np.maximum.at(self.registers, u_idx[last], u_rho[last])
         return self
 
-    SET_SEMANTICS = True  # duplicates don't change state
+    # state depends only on the summed (value, count) multiset, not on how
+    # update_batch calls split it: the harness feeds it once per task
+    BATCH_INVARIANT = True
 
     def update_batch(self, values: np.ndarray, weights=None) -> "HyperLogLog":
         """Insert a batch of int64 identifiers (e.g. token ids). Weights

@@ -26,7 +26,9 @@ _MAX = float(1 << 64)
 class ThetaSketch:
     __slots__ = ("k", "seed", "hashes")
 
-    SET_SEMANTICS = True
+    # state depends only on the summed (value, count) multiset, not on how
+    # update_batch calls split it: the harness feeds it once per task
+    BATCH_INVARIANT = True
 
     def __init__(self, k: int = 4096, seed: int = 0) -> None:
         if k < 16:

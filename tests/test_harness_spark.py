@@ -369,3 +369,177 @@ def test_file_work_units_cover_rows_exactly(spark, sequences_path, tmp_path,
     whole_sk = final_sketches(build_partials_from_files(
         spark, paths, spec, salt_buckets=4))
     assert split_sk["dds"].to_bytes() == whole_sk["dds"].to_bytes()
+
+
+# sketches whose state depends only on the summed (value, count) multiset:
+# stage 1 feeds them once per task (or per accumulator flush)
+def _order_free_factories():
+    from p2pddsketch_spark.sketches.cbloom import CountingBloomFilter
+    from p2pddsketch_spark.sketches.theta import ThetaSketch
+    return {"hll": lambda: HyperLogLog(p=12),
+            "cms": lambda: CountMinSketch(depth=4, width=1 << 12),
+            "cbf": lambda: CountingBloomFilter(m=1 << 14, k=4),
+            "theta": lambda: ThetaSketch(k=256),
+            "bloom": lambda: BloomFilter(m_bits=1 << 16, k=4)}
+
+
+def _file_stage1(spark, paths, factories, batch_size):
+    """Stage-1 rows with partition i reading exactly paths[i]."""
+    from p2pddsketch_spark.operators.harness import build_partials_from_files
+    specs = [SketchSpec(n, f, array_extractor("tokens"))
+             for n, f in factories.items()]
+    rows = build_partials_from_files(
+        spark, paths, specs, ("source",), batch_size=batch_size,
+        split_within_files=False).collect()
+    assert {r["partition_id"] for r in rows} == set(range(len(paths)))
+    return rows
+
+
+def _group_tokens(path, source, batch_size=None):
+    """The int64 token ids of one source's rows in one file: all at once,
+    or per Arrow batch as stage 1 reads them."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    pf = pq.ParquetFile(path)
+    tables = ([pf.read(columns=["source", "tokens"])] if batch_size is None
+              else pf.iter_batches(columns=["source", "tokens"],
+                                   batch_size=batch_size))
+    out = []
+    for t in tables:
+        rows = t.filter(pc.equal(t.column("source"), source))
+        if rows.num_rows:
+            out.append(pc.list_flatten(rows.column("tokens"))
+                       .to_numpy(zero_copy_only=False).astype(np.int64))
+    return out
+
+
+@pytest.mark.parametrize("batch_size,cap", [(64, None), (2048, None),
+                                            (64, 512)])
+def test_order_free_sketches_fed_once_per_task(spark, sequences_path,
+                                               monkeypatch, batch_size, cap):
+    """HLL, CMS, counting Bloom and theta partials are byte-identical to a
+    one-shot local update_batch over the task's group rows, and Bloom's
+    bits are too, at any batch size and with the per-task accumulator
+    flushed mid-task. Bloom's n_added shows where the feeds happened: the
+    group's distinct token count when fed once per task, more when the
+    cap forced flushes."""
+    from p2pddsketch_spark.operators import harness as H
+    if cap is not None:
+        monkeypatch.setattr(H, "_TASK_COUNTS_MAX", cap)
+    factories = _order_free_factories()
+    paths = H.parquet_file_list(sequences_path)
+    rows = _file_stage1(spark, paths, factories, batch_size)
+    assert len(rows) == len(paths) * 4 * len(factories)
+    for r in rows:
+        (toks,) = _group_tokens(paths[r["partition_id"]], r["source"])
+        want = factories[r["sketch_name"]]().update_batch(toks)
+        if r["sketch_name"] != "bloom":
+            assert bytes(r["sketch"]) == want.to_bytes(), r["sketch_name"]
+            continue
+        got = H.sketch_from_bytes(r["sketch"])
+        assert np.array_equal(got.bits, want.bits)
+        distinct = np.unique(toks).size
+        if cap is None:
+            assert got.n_added == distinct
+        else:
+            assert got.n_added > distinct
+
+
+def test_task_counts_any_ranges_match_one_shot_feed():
+    """The per-task accumulator over batches whose id ranges overlap,
+    widen, go negative or jump 10^12 away (which must flush, not allocate
+    the gap) feeds a CMS the same bytes as one update over all values."""
+    from p2pddsketch_spark.operators.harness import _TaskCounts, _dense_counts
+    rng = np.random.default_rng(11)
+    batches = [rng.integers(100, 5_000, 3_000), rng.integers(0, 60_000, 500),
+               rng.integers(-30_000, 10, 2_000),
+               rng.integers(10**12, 10**12 + 40_000, 4_000),
+               rng.integers(0, 300, 50)]
+    for cap in (1 << 22, 70_000, 1):
+        sk = CountMinSketch(depth=3, width=1 << 10)
+        acc = _TaskCounts(cap)
+        for b in batches:
+            acc.add(("tokens", ()), [sk], *_dense_counts(b))
+            assert acc.size <= max(cap, 1 << 16)
+        acc.flush()
+        want = CountMinSketch(depth=3, width=1 << 10).update_batch(
+            np.concatenate(batches))
+        assert sk.to_bytes() == want.to_bytes(), cap
+
+
+def test_order_sensitive_sketches_still_fed_per_batch(spark, sequences_path):
+    """DDSketch and t-digest over the same integer token ids (the domain
+    the per-task accumulator takes) are still fed once per (batch ×
+    group): byte-identical to a manual per-batch (unique, count) feed.
+    t-digest shows the difference — a one-shot feed gives other bytes."""
+    from p2pddsketch_spark.operators.harness import parquet_file_list
+    from p2pddsketch_spark.sketches.tdigest import TDigest
+    factories = {"dds": lambda: DDSketch(alpha=0.01, bin_limit=1 << 20),
+                 "tdigest": lambda: TDigest(delta=50)}
+    batch_size = 64
+    paths = parquet_file_list(sequences_path)
+    rows = _file_stage1(spark, paths, factories, batch_size)
+    one_shot_differs = False
+    for r in rows:
+        path, name = paths[r["partition_id"]], r["sketch_name"]
+        want = factories[name]()
+        for toks in _group_tokens(path, r["source"], batch_size):
+            want.update_batch(*np.unique(toks, return_counts=True))
+        assert bytes(r["sketch"]) == want.to_bytes(), name
+        if name == "tdigest":
+            (toks,) = _group_tokens(path, r["source"])
+            once = factories[name]().update_batch(
+                *np.unique(toks, return_counts=True))
+            one_shot_differs |= once.to_bytes() != want.to_bytes()
+    assert one_shot_differs
+
+
+def _exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "Exchange hashpartitioning")
+
+
+@pytest.mark.parametrize("salted", [False, True])
+def test_file_build_merge_shape(spark, sequences_path, salted):
+    """With stage-1 tasks ≤ salt_buckets every (group, name, salt) key holds
+    one partial, so `build_sketches_from_files` merges in one exchange;
+    with more tasks it keeps the salted level. Either way its sketches
+    are byte-identical to `merge_partials` over the same partials, and
+    choosing the shape launches no job."""
+    from p2pddsketch_spark.operators.harness import (
+        build_partials_from_files, build_sketches_from_files, merge_partials,
+        parquet_file_list)
+    specs = _specs()
+    paths = parquet_file_list(sequences_path)
+    tasks = build_partials_from_files(
+        spark, paths, specs, ("source",)).rdd.getNumPartitions()
+    assert tasks >= 2
+    salt_buckets = tasks - 1 if salted else tasks
+    sc = spark.sparkContext
+
+    def with_jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            df = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    partials, partial_jobs = with_jobs(
+        f"shape-partials-{salted}", lambda: build_partials_from_files(
+            spark, paths, specs, ("source",), salt_buckets=salt_buckets))
+    built, built_jobs = with_jobs(
+        f"shape-sketches-{salted}", lambda: build_sketches_from_files(
+            spark, sequences_path, specs, ("source",),
+            salt_buckets=salt_buckets))
+    assert built_jobs == partial_jobs
+    assert _exchanges(built) == (2 if salted else 1)
+    tree = merge_partials(partials, ("source",))
+    assert _exchanges(tree) == 2
+
+    def blobs(df):
+        return {(r["source"], r["sketch_name"]): bytes(r["sketch"])
+                for r in df.collect()}
+    got, want = blobs(built), blobs(tree)
+    assert len(got) == 4 * len(specs)
+    assert got == want

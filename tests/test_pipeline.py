@@ -171,6 +171,33 @@ def test_bpe_train_merges_greedy_semantics(spark):
         bpe_train_merges(df, k=0)
 
 
+def test_bpe_final_vocab_reuses_round_k_checkpoint(spark):
+    """When k is a multiple of the checkpoint cadence, round k's checkpoint
+    already materialized the final vocabulary: asking for it launches no
+    job beyond the train-only loop, and the returned table is usable."""
+    from p2pddsketch_spark.operators import bpe
+    df = spark.createDataFrame(
+        [("the quick brown fox jumps over the lazy dog",),
+         ("pack my box with five dozen liquor jugs",),
+         ("how vexingly quick daft zebras jump",)], "text string")
+    k = 8
+    assert k % bpe._CHECKPOINT_EVERY == 0
+    sc = spark.sparkContext
+    jobs, out = {}, {}
+    for need_final in (False, True):
+        group = f"bpe-final-{need_final}"
+        sc.setJobGroup(group, group)
+        try:
+            out[need_final] = bpe._train(df, k, "text", need_final=need_final)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[need_final] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(out[True][0]) == k and out[True][0] == out[False][0]
+    assert jobs[True] == jobs[False]
+    assert out[True][1].count() == df.selectExpr(
+        "explode(split(text, ' ')) AS w").distinct().count()
+
+
 def test_bpe_encode_applies_trained_merges(spark):
     """Encoding uses the trained vocabulary: merged symbols shrink the
     per-doc symbol count below the character count, every non-empty doc
