@@ -13,7 +13,9 @@ round's new/changed queries.
 
 Usage:  python tools/plan_rotation.py [--window 50]
 Exit 1 if the CURRENT order already violates the staleness bound (same
-condition as tests/test_query_oracles.py::test_registry_window_policy).
+condition as tests/test_query_oracles.py::test_registry_window_policy);
+it then prints the front-load that mends it: the stale entries,
+gate-cost-descending, ahead of the current window.
 """
 
 from __future__ import annotations
@@ -45,10 +47,15 @@ def green(row: dict) -> bool:
                 and row.get("hash_match"))
 
 
-def main() -> int:
+def print_by_cost(names: list[str], times: dict[str, float]) -> None:
+    for n in names:
+        print(f"  {n:34s} {times.get(n, float('nan')):6.1f}s")
+
+
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--window", type=int, default=50)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     import __spark_entry__ as E
     names = list(E.queries().keys())
@@ -68,27 +75,30 @@ def main() -> int:
     except Exception:
         times = {}
 
-    window = names[:args.window]
+    def cost_desc(ns: list[str]) -> list[str]:
+        return sorted(ns, key=lambda n: -times.get(n, 0.0))
+
     beyond = names[args.window:]
-    stale_now = [n for n in beyond if n not in recent_green]
+    print(f"registry: {len(names)} queries; window {args.window}; "
+          f"latest driver round r{latest_n} ({len(latest_green)} green)")
+    stale_now = cost_desc([n for n in beyond if n not in recent_green])
+    if stale_now:
+        free = args.window - len(stale_now)
+        print(f"VIOLATION — {len(stale_now)} beyond-window entries without "
+              f"a green row in the two most recent rounds.\n"
+              f"proposed front-load (gate-cost-descending), then the first "
+              f"{max(free, 0)} entries of the current window:")
+        print_by_cost(stale_now, times)
+        return 1
 
     # after the NEXT driver round, today's window becomes r{latest+1}-green
     # and today's beyond-window entries (green only in r{latest}) must
     # rotate in — they are next round's mandatory front-load
-    must_rotate = [n for n in beyond if n in latest_green]
-    must_rotate.sort(key=lambda n: -times.get(n, 0.0))
+    must_rotate = cost_desc([n for n in beyond if n in latest_green])
     free = args.window - len(must_rotate)
-
-    print(f"registry: {len(names)} queries; window {args.window}; "
-          f"latest driver round r{latest_n} ({len(latest_green)} green)")
-    if stale_now:
-        print(f"VIOLATION — beyond-window entries without a green row in "
-              f"the two most recent rounds: {stale_now}")
-        return 1
     print(f"\nnext-round window plan: front-load these {len(must_rotate)} "
           f"(gate-cost-descending), then up to {free} new/changed entries:")
-    for n in must_rotate:
-        print(f"  {n:34s} {times.get(n, float('nan')):6.1f}s")
+    print_by_cost(must_rotate, times)
     print(f"\nfree slots for new/changed queries next round: {free}")
     print("surface headroom before the 2-round staleness bound becomes "
           f"unsatisfiable: {2 * args.window - len(names)} more queries")
