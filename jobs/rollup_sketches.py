@@ -548,37 +548,27 @@ def main(argv: list[str] | None = None) -> int:
              .getOrCreate())
     from pyspark.errors import PySparkException
     try:
-        if args.cmd == "update":
+        if args.cmd in ("update", "stream"):
             gcols = tuple(c for c in args.group_cols.split(",") if c)
+            specs = _specs(args.value_col, args.tokens_col, args.alpha,
+                           args.hll_p, names=args.sketches, ss_k=args.ss_k,
+                           ts_col=args.ts_col, eh_k=args.eh_k,
+                           ecm_width=args.ecm_width,
+                           wdds_bucket=_windows(args.wdds_bucket,
+                                                args.ts_unit)[0],
+                           wdds_max_buckets=args.wdds_max_buckets,
+                           wss_bucket=_windows(args.wss_bucket,
+                                               args.ts_unit)[0],
+                           wss_max_buckets=args.wss_max_buckets)
+        if args.cmd == "update":
             stats = R.rollup_update(
-                spark, args.input, args.state,
-                _specs(args.value_col, args.tokens_col, args.alpha, args.hll_p,
-                       names=args.sketches, ss_k=args.ss_k,
-                       ts_col=args.ts_col, eh_k=args.eh_k,
-                       ecm_width=args.ecm_width,
-                       wdds_bucket=_windows(args.wdds_bucket,
-                                            args.ts_unit)[0],
-                       wdds_max_buckets=args.wdds_max_buckets,
-                       wss_bucket=_windows(args.wss_bucket,
-                                           args.ts_unit)[0],
-                       wss_max_buckets=args.wss_max_buckets),
+                spark, args.input, args.state, specs,
                 group_cols=gcols, salt_buckets=args.salt_buckets,
                 files_per_task=args.files_per_task)
             print(json.dumps(stats, sort_keys=True))
         elif args.cmd == "stream":
-            gcols = tuple(c for c in args.group_cols.split(",") if c)
             stats = R.rollup_stream_update(
-                spark, args.input, args.state,
-                _specs(args.value_col, args.tokens_col, args.alpha, args.hll_p,
-                       names=args.sketches, ss_k=args.ss_k,
-                       ts_col=args.ts_col, eh_k=args.eh_k,
-                       ecm_width=args.ecm_width,
-                       wdds_bucket=_windows(args.wdds_bucket,
-                                            args.ts_unit)[0],
-                       wdds_max_buckets=args.wdds_max_buckets,
-                       wss_bucket=_windows(args.wss_bucket,
-                                           args.ts_unit)[0],
-                       wss_max_buckets=args.wss_max_buckets),
+                spark, args.input, args.state, specs,
                 group_cols=gcols, checkpoint_dir=args.checkpoint,
                 salt_buckets=args.salt_buckets,
                 max_files_per_trigger=args.max_files_per_trigger)

@@ -24,29 +24,6 @@ def splitmix64(x: np.ndarray, seed: int = 0) -> np.ndarray:
     return z
 
 
-def hash_strings(values, seed: int = 0) -> np.ndarray:
-    """Deterministic 64-bit hash of a sequence of strings -> uint64 array.
-
-    Uses a bytes-level FNV-1a folded through splitmix64. Strings are a cold
-    path relative to token-id arrays; this still avoids Python-level loops
-    over characters by hashing via numpy byte views per unique string.
-    """
-    import pandas as pd
-
-    s = pd.Series(values, dtype="object")
-    uniq, inv = np.unique(s.fillna("\x00<null>").to_numpy(dtype=object), return_inverse=True)
-    out = np.empty(len(uniq), dtype=np.uint64)
-    for i, u in enumerate(uniq):
-        b = np.frombuffer(u.encode("utf-8"), dtype=np.uint8)
-        h = np.uint64(0xCBF29CE484222325)
-        with np.errstate(over="ignore"):
-            for chunk in (b[j:j + 8].copy() for j in range(0, len(b), 8)):
-                chunk.resize(8)
-                h = (h ^ chunk.view(np.uint64)[0]) * np.uint64(0x100000001B3)
-        out[i] = h
-    return splitmix64(out[inv], seed=seed)
-
-
 def nlz64(w: np.ndarray) -> np.ndarray:
     """Vectorized count of leading zeros of uint64 (64 for w == 0)."""
     w = w.astype(np.uint64)

@@ -11,10 +11,12 @@ table that each maintenance run advances incrementally:
     merge tree every build uses — sketch merge is associative and
     order-invariant, so the published state is byte-identical to a
     one-shot build over all files ever seen (pytest-pinned).
-  * `rollup_quantiles` / `rollup_cardinality` answer queries FROM the
-    stored blobs — no data re-scan, a mapInPandas over one row per
-    (group, sketch): the reason the warehouse exists. Grouping columns
-    come from the committed manifest, not from the caller.
+  * `rollup_quantiles` / `rollup_cardinality` (and every other
+    `rollup_*` blob reader) answer queries FROM the stored blobs — no
+    data re-scan, one mapInArrow stage over one row per (group,
+    sketch) that decodes each blob once: the reason the warehouse
+    exists. Grouping columns come from the committed manifest, not from
+    the caller.
   * `rollup_prune` deletes old committed versions (keeping the newest
     `keep`), bounding state-dir growth; manifests intentionally carry
     the FULL file lineage (the Iceberg-manifest shape — what makes the
@@ -952,42 +954,6 @@ def rollup_fsck(spark: SparkSession, state_dir: str,
             "aborted": sorted(aborted), "findings": findings}
 
 
-def _decode_map(sketch_name: str, fn_name: str, args: tuple, out_ddl: str):
-    """mapInPandas factory: decode each stored blob, call a query method,
-    emit one row per (group, arg). Empty sketches (a group whose value
-    column was entirely NULL) yield NULL estimates instead of poisoning
-    the whole query — the SQL-NULL rendering of the reference's
-    empty-bin NaN rule (/root/reference/ddsketch.cc:520-557); NaN
-    itself can't round-trip the pandas→Arrow hop, which treats NaN as
-    the null sentinel."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, fn_name, None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        f"does not support {fn_name!r}")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                if args:
-                    empty = getattr(sk, "n", 0) == 0
-                    for a in args:
-                        rows.append(base + [float(a),
-                                            np.nan if empty else float(fn(a)),
-                                            int(getattr(sk, "n", 0))])
-                else:
-                    rows.append(base + [float(fn()), int(row["rows_seen"])])
-            cols = [c.split(" ")[0] for c in out_ddl.split(", ")]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return run
-
-
 def _version_state(spark: SparkSession, state_dir: str, sketch_name: str,
                    version: int | None = None,
                    versions: list[tuple[int, dict]] | None = None):
@@ -1019,10 +985,53 @@ def _version_state(spark: SparkSession, state_dir: str, sketch_name: str,
     return st, group_cols, version, manifest
 
 
-def _grouped_state(spark: SparkSession, state_dir: str, sketch_name: str):
-    """(filtered blob table, group_cols from the committed manifest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name)
-    return st, group_cols
+def _blob_query(spark: SparkSession, state_dir: str, sketch_name: str,
+                version: int | None, versions: list | None,
+                method: str | None, ddl: str, rows_of, order) -> DataFrame:
+    """The one read stage behind every stored-blob reader: a mapInArrow
+    over the committed version's blob rows (one per group) that decodes
+    each blob once and emits `rows_of(sketch, fn, rows_seen)`'s tuples
+    (matching `ddl`) behind the row's group columns, which ride through
+    with their stored Arrow types. `fn` is the sketch's bound `method`
+    — a family without it is a clean UsageError — or None when the
+    reader dispatches on the family itself. NaN values become SQL NULL:
+    an empty sketch (a group whose value column was entirely NULL)
+    yields NULL estimates instead of poisoning the whole query — the
+    SQL-NULL rendering of the reference implementation's empty-bin NaN
+    rule. Rows come back ordered by (group…, *order)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
+                                          version, versions)
+    values = StructType.fromDDL(ddl).fields
+    schema = StructType([st.schema[c] for c in group_cols] + values)
+    types = [to_arrow_type(f.dataType) for f in values]
+    keys, names = list(group_cols), schema.fieldNames()
+
+    def run(batches):
+        import pyarrow as pa
+        for batch in batches:
+            idx, rows = [], []
+            for i, (blob, rows_seen) in enumerate(zip(
+                    batch.column("sketch").to_pylist(),
+                    batch.column("rows_seen").to_pylist())):
+                sk = sketch_from_bytes(blob)
+                fn = getattr(sk, method, None) if method else None
+                if method and fn is None:
+                    raise UsageError(
+                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
+                        f"does not support {method!r}")
+                for row in rows_of(sk, fn, rows_seen):
+                    idx.append(i)
+                    rows.append(row)
+            cols = list(zip(*rows)) or [()] * len(types)
+            taken = batch.select(keys).take(pa.array(idx, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                taken.columns + [pa.array(c, type=t, from_pandas=True)
+                                 for c, t in zip(cols, types)],
+                names=names)
+
+    return st.mapInArrow(run, schema).orderBy(*group_cols, *order)
 
 
 def rollup_quantiles(spark: SparkSession, state_dir: str, sketch_name: str,
@@ -1030,17 +1039,17 @@ def rollup_quantiles(spark: SparkSession, state_dir: str, sketch_name: str,
                      _versions: list | None = None) -> DataFrame:
     """Quantile estimates straight from the stored blobs (DDSketch, KLL,
     t-digest, REQ, moment — anything with `.quantile(q)`): one
-    mapInPandas over |groups| rows, zero input-data re-scan. Grouping
+    mapInArrow over |groups| rows, zero input-data re-scan. Grouping
     columns are read from the committed manifest; `version` picks a
     specific committed version (default latest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}q double, estimate double, n long"
-    return (st.mapInPandas(_decode_map(sketch_name, "quantile", tuple(qs), ddl),
-                           schema=ddl)
-            .orderBy(*group_cols, "q"))
+    def rows(sk, fn, rows_seen):
+        n = getattr(sk, "n", 0)
+        for q in qs:
+            yield float(q), np.nan if n == 0 else float(fn(q)), int(n)
+
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "quantile", "q double, estimate double, n long", rows,
+                       ["q"])
 
 
 def rollup_cardinality(spark: SparkSession, state_dir: str,
@@ -1049,14 +1058,12 @@ def rollup_cardinality(spark: SparkSession, state_dir: str,
     """Distinct-count estimates from stored HLL/theta blobs; grouping
     columns are read from the committed manifest; `version` picks a
     specific committed version (default latest)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}estimate double, rows_seen long"
-    return (st.mapInPandas(_decode_map(sketch_name, "cardinality", (), ddl),
-                           schema=ddl)
-            .orderBy(*group_cols))
+    def rows(sk, fn, rows_seen):
+        yield float(fn()), rows_seen
+
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "cardinality", "estimate double, rows_seen long", rows,
+                       [])
 
 
 def rollup_overlap(spark: SparkSession, state_dir: str,
@@ -1171,45 +1178,28 @@ def rollup_histogram(spark: SparkSession, state_dir: str,
     to dump the histogram of a trailing window (the merge of its
     overlapping buckets). Output: (group…, key, count, lower, upper,
     estimate)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}key long, count long, lower double, upper double, "
-           "estimate double")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
+    from p2pddsketch_spark.sketches.ddsketch import DDSketch
+    from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
 
-    def run(batches):
-        import pandas as pd
-        from p2pddsketch_spark.sketches.ddsketch import DDSketch
-        from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                if isinstance(sk, WindowedDDSketch):
-                    merged, _, _ = sk.window_sketch(window, now)
-                    sk = merged if merged is not None else sk._mk()
-                elif isinstance(sk, DDSketch):
-                    if window is not None:
-                        raise UsageError(
-                            "windowed histograms need wdds blobs; "
-                            f"{sketch_name!r} is a plain full-stream "
-                            "DDSketch")
-                else:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "has no log-γ bin table (histogram needs "
-                        "dds or wdds blobs)")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for b in sk.to_bins_table():
-                    rows.append(base + [b["key"], b["count"], b["lower"],
-                                        b["upper"], b["estimate"]])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        if isinstance(sk, WindowedDDSketch):
+            merged, _, _ = sk.window_sketch(window, now)
+            sk = merged if merged is not None else sk._mk()
+        elif isinstance(sk, DDSketch):
+            if window is not None:
+                raise UsageError(
+                    "windowed histograms need wdds blobs; "
+                    f"{sketch_name!r} is a plain full-stream DDSketch")
+        else:
+            raise UsageError(
+                f"sketch {sketch_name!r} ({type(sk).__name__}) has no "
+                "log-γ bin table (histogram needs dds or wdds blobs)")
+        for b in sk.to_bins_table():
+            yield b["key"], b["count"], b["lower"], b["upper"], b["estimate"]
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "key"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       None, "key long, count long, lower double, "
+                       "upper double, estimate double", rows, ["key"])
 
 
 def rollup_topk(spark: SparkSession, state_dir: str,
@@ -1227,32 +1217,13 @@ def rollup_topk(spark: SparkSession, state_dir: str,
     quantile path's NULL-estimate row: an absent ranking is the honest
     answer, a NULL rank-1 item is not. Ordering (count desc, item asc)
     is the sketch's own deterministic tie-break."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}rank int, item long, count_est long, count_err long"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
+    def rows(sk, fn, rows_seen):
+        for rank, (item, cnt, err) in enumerate(fn(m), start=1):
+            yield rank, item, cnt, err
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for rank, (item, cnt, err) in enumerate(fn(m), start=1):
-                    rows.append(base + [rank, item, cnt, err])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "rank"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "top", "rank int, item long, count_est long, "
+                       "count_err long", rows, ["rank"])
 
 
 def rollup_window_topk(spark: SparkSession, state_dir: str,
@@ -1274,38 +1245,19 @@ def rollup_window_topk(spark: SparkSession, state_dir: str,
     emits no rows (the honest empty ranking, as in `rollup_topk`).
     Output: (group…, window, rank, item, count_est, count_err,
     n_covered, covered_from, covered_to)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, rank int, item long, count_est long, "
-           "count_err long, n_covered long, covered_from long, "
-           "covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for w in wins:
-                    top, n_cov, lo, hi = fn(m, w, now=now)
-                    for rank, (item, cnt, err) in enumerate(top, start=1):
-                        rows.append(base + [w, rank, item, cnt, err,
-                                            n_cov, lo, hi])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        for w in wins:
+            top, n_cov, lo, hi = fn(m, w, now=now)
+            for rank, (item, cnt, err) in enumerate(top, start=1):
+                yield w, rank, item, cnt, err, n_cov, lo, hi
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "rank"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window_top", "window long, rank int, item long, "
+                       "count_est long, count_err long, n_covered long, "
+                       "covered_from long, covered_to long", rows,
+                       ["window", "rank"])
 
 
 def rollup_window_cardinality(spark: SparkSession, state_dir: str,
@@ -1327,35 +1279,16 @@ def rollup_window_cardinality(spark: SparkSession, state_dir: str,
     compares activity-relative windows — pass an explicit warehouse
     clock for cross-group comparability. Output: (group…, window,
     estimate, rows_seen)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}window long, estimate double, rows_seen long"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "distinct_in_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'distinct_in_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_pairs == 0
-                for w in wins:
-                    est = np.nan if empty else float(fn(w, now=now))
-                    rows.append(base + [w, est, int(row["rows_seen"])])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        for w in wins:
+            est = np.nan if sk.n_pairs == 0 else float(fn(w, now=now))
+            yield w, est, rows_seen
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "distinct_in_last", "window long, estimate double, "
+                       "rows_seen long", rows, ["window"])
 
 
 def rollup_window_rows(spark: SparkSession, state_dir: str,
@@ -1370,36 +1303,17 @@ def rollup_window_rows(spark: SparkSession, state_dir: str,
     receipt (|estimate - truth| <= err_bound, any arrival order).
     Window units / `now` semantics match `rollup_window_cardinality`.
     Output: (group…, window, estimate, err_bound)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}window long, estimate double, err_bound double"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "count_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'count_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_buckets == 0
-                for w in wins:
-                    est, err = ((np.nan, np.nan) if empty
-                                else fn(w, now=now))
-                    rows.append(base + [w, float(est), float(err)])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        for w in wins:
+            est, err = ((np.nan, np.nan) if sk.n_buckets == 0
+                        else fn(w, now=now))
+            yield w, float(est), float(err)
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "count_last", "window long, estimate double, "
+                       "err_bound double", rows, ["window"])
 
 
 def rollup_window_counts(spark: SparkSession, state_dir: str,
@@ -1417,42 +1331,22 @@ def rollup_window_counts(spark: SparkSession, state_dir: str,
     and downward excursions are bounded by the count-min collision mass.
     Window units / `now` semantics match `rollup_window_cardinality`.
     Output: (group…, item, window, estimate, err_bound)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = f"{gddl}item long, window long, estimate double, err_bound double"
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     kq = np.asarray(sorted({int(k) for k in keys}), dtype=np.int64)
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "estimate_last", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'estimate_last'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                empty = sk.n_buckets == 0
-                for w in wins:
-                    if empty:
-                        est = np.full(kq.size, np.nan)
-                        err = np.full(kq.size, np.nan)
-                    else:
-                        est, err = fn(kq, w, now=now)
-                    for i, k in enumerate(kq):
-                        rows.append(base + [int(k), w, float(est[i]),
-                                            float(err[i])])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        for w in wins:
+            if sk.n_buckets == 0:
+                est = err = np.full(kq.size, np.nan)
+            else:
+                est, err = fn(kq, w, now=now)
+            for k, e, b in zip(kq, est, err):
+                yield int(k), w, float(e), float(b)
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "item", "window"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "estimate_last", "item long, window long, "
+                       "estimate double, err_bound double", rows,
+                       ["item", "window"])
 
 
 def rollup_window_quantiles(spark: SparkSession, state_dir: str,
@@ -1472,38 +1366,19 @@ def rollup_window_quantiles(spark: SparkSession, state_dir: str,
     `now` semantics match `rollup_window_cardinality`.
     Output: (group…, window, q, estimate, n_covered, covered_from,
     covered_to)."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, q double, estimate double, "
-           "n_covered long, covered_from long, covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     qv = [float(q) for q in qs]
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_quantiles", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_quantiles'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                for w in wins:
-                    ests, n_cov, lo, hi = fn(qv, window=w, now=now)
-                    for q, est in zip(qv, ests):
-                        rows.append(base + [w, q, float(est), int(n_cov),
-                                            int(lo), int(hi)])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        for w in wins:
+            ests, n_cov, lo, hi = fn(qv, window=w, now=now)
+            for q, est in zip(qv, ests):
+                yield w, q, float(est), int(n_cov), int(lo), int(hi)
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "q"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window_quantiles", "window long, q double, "
+                       "estimate double, n_covered long, covered_from long, "
+                       "covered_to long", rows, ["window", "q"])
 
 
 def rollup_window_drift(spark: SparkSession, state_dir: str,
@@ -1536,67 +1411,45 @@ def rollup_window_drift(spark: SparkSession, state_dir: str,
     cur_err, prev_err) where metric is 'q<q>' / 'rows'; err columns
     carry EH's hard receipts and are NaN for wdds (its guarantee is
     the relative α contract). ratio is NaN when previous == 0."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, metric string, current double, "
-           "previous double, delta double, ratio double, "
-           "cur_err double, prev_err double")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     wins = [int(w) for w in windows]
     qv = [float(q) for q in (qs or [0.5, 0.99])]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                t_ref = getattr(sk, "t_max", None)
-                for w in wins:
-                    ref = int(t_ref) if now is None else int(now)
-                    prev_now = ref - w
-                    if hasattr(sk, "window_quantiles"):
-                        cur, n_c, lo_c, _ = sk.window_quantiles(
-                            qv, window=w, now=ref)
-                        # an empty current window can't tile at its
-                        # coverage edge (lo_c is the 0 sentinel) —
-                        # anchor the previous window at ref - w so a
-                        # group that went SILENT still reports
-                        # (previous=real, current=NaN) instead of
-                        # NaN/NaN (same guard as window_topk_drift)
-                        prv, _, _, _ = sk.window_quantiles(
-                            qv, window=w, now=lo_c - 1 if n_c else ref - w)
-                        pairs = [(f"q{q:g}", float(c), float(p),
-                                  np.nan, np.nan)
-                                 for q, c, p in zip(qv, cur, prv)]
-                    elif hasattr(sk, "count_last"):
-                        c, ce = sk.count_last(w, now=ref)
-                        # previous window (ref-2w, ref-w] = suffix
-                        # difference; hard bounds add
-                        c2, e2 = sk.count(prev_now - w)
-                        p, pe = c2 - c, e2 + ce
-                        pairs = [("rows", float(c), float(p),
-                                  float(ce), float(pe))]
-                    else:
-                        raise UsageError(
-                            f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                            "cannot answer adjacent-window drift: interval "
-                            "queries need time-indexed (wdds) or "
-                            "subtractable (eh) state")
-                    for metric, c, p, ce, pe in pairs:
-                        delta = c - p
-                        ratio = c / p if p == p and p != 0.0 \
-                            else float("nan")
-                        rows.append(base + [w, metric, c, p, delta, ratio,
-                                            ce, pe])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        t_ref = getattr(sk, "t_max", None)
+        for w in wins:
+            ref = int(t_ref) if now is None else int(now)
+            if hasattr(sk, "window_quantiles"):
+                cur, n_c, lo_c, _ = sk.window_quantiles(qv, window=w, now=ref)
+                # an empty current window can't tile at its coverage edge
+                # (lo_c is the 0 sentinel) — anchor the previous window at
+                # ref - w so a group that went SILENT still reports
+                # (previous=real, current=NaN) instead of NaN/NaN (same
+                # guard as window_topk_drift)
+                prv, _, _, _ = sk.window_quantiles(
+                    qv, window=w, now=lo_c - 1 if n_c else ref - w)
+                pairs = [(f"q{q:g}", float(c), float(p), np.nan, np.nan)
+                         for q, c, p in zip(qv, cur, prv)]
+            elif hasattr(sk, "count_last"):
+                c, ce = sk.count_last(w, now=ref)
+                # previous window (ref-2w, ref-w] = suffix difference;
+                # hard bounds add
+                c2, e2 = sk.count(ref - 2 * w)
+                p, pe = c2 - c, e2 + ce
+                pairs = [("rows", float(c), float(p), float(ce), float(pe))]
+            else:
+                raise UsageError(
+                    f"sketch {sketch_name!r} ({type(sk).__name__}) cannot "
+                    "answer adjacent-window drift: interval queries need "
+                    "time-indexed (wdds) or subtractable (eh) state")
+            for metric, c, p, ce, pe in pairs:
+                ratio = c / p if p == p and p != 0.0 else float("nan")
+                yield w, metric, c, p, c - p, ratio, ce, pe
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window", "metric"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       None, "window long, metric string, current double, "
+                       "previous double, delta double, ratio double, "
+                       "cur_err double, prev_err double", rows,
+                       ["window", "metric"])
 
 
 def rollup_window_topk_drift(spark: SparkSession, state_dir: str,
@@ -1626,62 +1479,39 @@ def rollup_window_topk_drift(spark: SparkSession, state_dir: str,
     CURRENT window is empty anchors the previous window at `now - w`
     instead of the (nonexistent) coverage edge and reports its former
     top-m as 'left' — going silent is churn, not absence of rows."""
-    st, group_cols, _, _ = _version_state(spark, state_dir, sketch_name,
-                                          version, _versions)
-    gddl = "".join(f"{c} {st.schema[c].dataType.simpleString()}, "
-                   for c in group_cols)
-    ddl = (f"{gddl}window long, item long, rank_prev int, rank_cur int, "
-           "count_prev long, count_cur long, delta long, status string, "
-           "prev_covered_from long, cur_covered_from long, "
-           "cur_covered_to long")
-    cols = [c.split(" ")[0] for c in ddl.split(", ")]
     wins = [int(w) for w in windows]
 
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sk = sketch_from_bytes(bytes(row["sketch"]))
-                fn = getattr(sk, "window_top", None)
-                if fn is None:
-                    raise UsageError(
-                        f"sketch {sketch_name!r} ({type(sk).__name__}) "
-                        "does not support 'window_top'")
-                base = [row[c] for c in pdf.columns
-                        if c not in ("sketch", "sketch_name", "rows_seen")]
-                t_ref = getattr(sk, "t_max", None)
-                for w in wins:
-                    ref = int(t_ref) if now is None else int(now)
-                    cur, _, lo_c, hi_c = fn(m, w, now=ref)
-                    # an empty current window can't tile at its
-                    # coverage edge — anchor the previous window at
-                    # ref - w so a group that went silent still
-                    # reports its former top-m as 'left' (the loudest
-                    # churn signal must not vanish into zero rows)
-                    prv, _, lo_p, _ = fn(m, w, now=lo_c - 1) if cur \
-                        else fn(m, w, now=ref - w)
-                    cur_d = {item: (rk, cnt) for rk, (item, cnt, _)
-                             in enumerate(cur, start=1)}
-                    prv_d = {item: (rk, cnt) for rk, (item, cnt, _)
-                             in enumerate(prv, start=1)}
-                    for item in sorted(cur_d.keys() | prv_d.keys()):
-                        pr, pc = prv_d.get(item, (None, None))
-                        cr, cc = cur_d.get(item, (None, None))
-                        status = ("entered" if pr is None
-                                  else "left" if cr is None else "moved")
-                        delta = None if pc is None or cc is None \
-                            else cc - pc
-                        rows.append(base + [w, item, pr, cr, pc, cc,
-                                            delta, status, lo_p, lo_c,
-                                            hi_c])
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(sk, fn, rows_seen):
+        t_ref = getattr(sk, "t_max", None)
+        for w in wins:
+            ref = int(t_ref) if now is None else int(now)
+            cur, _, lo_c, hi_c = fn(m, w, now=ref)
+            # an empty current window can't tile at its coverage edge —
+            # anchor the previous window at ref - w so a group that went
+            # silent still reports its former top-m as 'left' (the
+            # loudest churn signal must not vanish into zero rows)
+            prv, _, lo_p, _ = fn(m, w, now=lo_c - 1 if cur else ref - w)
+            cur_d = {item: (rk, cnt)
+                     for rk, (item, cnt, _) in enumerate(cur, start=1)}
+            prv_d = {item: (rk, cnt)
+                     for rk, (item, cnt, _) in enumerate(prv, start=1)}
+            for item in sorted(cur_d.keys() | prv_d.keys()):
+                pr, pc = prv_d.get(item, (None, None))
+                cr, cc = cur_d.get(item, (None, None))
+                status = ("entered" if pr is None
+                          else "left" if cr is None else "moved")
+                delta = None if pc is None or cc is None else cc - pc
+                yield (w, item, pr, cr, pc, cc, delta, status, lo_p, lo_c,
+                       hi_c)
 
-    return (st.mapInPandas(run, schema=ddl)
-            .orderBy(*group_cols, "window",
-                     F.coalesce(F.col("rank_cur"), F.lit(1 << 30)),
-                     F.coalesce(F.col("rank_prev"), F.lit(1 << 30)),
-                     "item"))
+    return _blob_query(spark, state_dir, sketch_name, version, _versions,
+                       "window_top", "window long, item long, rank_prev int, "
+                       "rank_cur int, count_prev long, count_cur long, "
+                       "delta long, status string, prev_covered_from long, "
+                       "cur_covered_from long, cur_covered_to long", rows,
+                       ["window", F.coalesce(F.col("rank_cur"), F.lit(1 << 30)),
+                        F.coalesce(F.col("rank_prev"), F.lit(1 << 30)),
+                        "item"])
 
 
 def rollup_topk_drift(spark: SparkSession, state_dir: str,
@@ -1791,7 +1621,7 @@ def rollup_drift(spark: SparkSession, state_dir: str, sketch_name: str = "dds",
 
     Both versions belong to one state, so the update path has already
     pinned their spec signature and group columns equal — the estimates
-    are comparable by construction. Cost: two |groups|-row mapInPandas
+    are comparable by construction. Cost: two |groups|-row mapInArrow
     decodes and one tiny join; no input re-scan, so the query costs the
     same at sf0.001 and at 10^12 rows. The reference can only answer
     this by re-running its whole simulator on both datasets

@@ -550,10 +550,6 @@ def q_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.top_tokens(load(spark, sf_dir, "documents"), k=20)
 
 
-def q_distinct_tokens_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.distinct_tokens_by(load(spark, sf_dir, "documents"), "source")
-
-
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-5 merge of the `top_tokens_exact` + `distinct_tokens_by_source`
     gate rows: exact token heavy hitters (the CMS oracle) and per-source
@@ -570,25 +566,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("source").alias("item"),
                     F.col("n_distinct").cast("long").alias("cnt")))
     return top.unionByName(dist).orderBy("stat", F.desc("cnt"), "item")
-
-
-def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.doc_stats(load(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text.quality_score(load(spark, sf_dir, "documents")).orderBy("doc_id")
-
-
-def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", text.language_id_col("text").alias("lang_pred")).orderBy("doc_id")
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate/template-spam signal: share of trigram occurrences
-    taken by the most-repeated trigram per doc."""
-    return text.repetition_stats(load(spark, sf_dir, "documents"), n=3)
 
 
 def q_token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2120,17 +2097,6 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (bpe_train_merges(load(spark, sf_dir, "documents"), k=5)
             .select("iteration", "left", "right", "merged", "pair_count")
             .orderBy("iteration"))
-
-
-def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY half of tokenizer training: encode every document with
-    the 5 trained merges. One vocab-keyed join + one doc-keyed
-    re-assembly; enc_hash (positional md5 over per-word symbol strings)
-    pins every symbol at every position."""
-    from p2pddsketch_spark.operators.bpe import bpe_encode
-    return (bpe_encode(load(spark, sf_dir, "documents"), k=5)
-            .select("doc_id", "n_words", "n_sym", "enc_hash")
-            .orderBy("doc_id"))
 
 
 def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:

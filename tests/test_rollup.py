@@ -2491,3 +2491,118 @@ def test_stream_dedup_output_invariant_under_batching(spark, tmp_path):
     for mft, (kept, keys) in results.items():
         assert keys == expect, mft
         assert kept == len(expect), mft
+
+
+# ------------------------------------------------- blob-query read primitive
+
+@pytest.fixture(scope="module")
+def dds_hll_state(spark, seq_dir, tmp_path_factory):
+    """One committed dds + hll state, shared by the wrong-family cases."""
+    state = str(tmp_path_factory.mktemp("wrong_family") / "state")
+    R.rollup_update(spark, seq_dir, state, _specs(),
+                    group_cols=("source",), salt_buckets=4)
+    return state
+
+
+@pytest.mark.parametrize("read, method", [
+    (lambda s, st: R.rollup_quantiles(s, st, "hll", [0.5]), "quantile"),
+    (lambda s, st: R.rollup_cardinality(s, st, "dds"), "cardinality"),
+    (lambda s, st: R.rollup_topk(s, st, "dds"), "top"),
+    (lambda s, st: R.rollup_window_topk(s, st, [10], "dds"), "window_top"),
+    (lambda s, st: R.rollup_window_cardinality(s, st, [10], "dds"),
+     "distinct_in_last"),
+    (lambda s, st: R.rollup_window_rows(s, st, [10], "dds"), "count_last"),
+    (lambda s, st: R.rollup_window_counts(s, st, [1], [10], "dds"),
+     "estimate_last"),
+    (lambda s, st: R.rollup_window_quantiles(s, st, [0.5], [10], "dds"),
+     "window_quantiles"),
+    (lambda s, st: R.rollup_window_topk_drift(s, st, [10], "dds"),
+     "window_top"),
+], ids=["quantiles", "cardinality", "topk", "window_topk",
+        "window_cardinality", "window_rows", "window_counts",
+        "window_quantiles", "window_topk_drift"])
+def test_reader_on_wrong_family_names_missing_method(spark, dds_hll_state,
+                                                     read, method):
+    """Every method-dispatched blob reader, asked of a family without
+    its query method, fails with the one typed message naming that
+    method — not an AttributeError from deep inside the worker."""
+    with pytest.raises(Exception, match=f"does not support '{method}'"):
+        read(spark, dds_hll_state).collect()
+
+
+def test_window_readers_all_null_group_is_sql_null(spark, tmp_path):
+    """A group whose (value, ts) pairs are all NULL stores empty shll /
+    ecm / eh sketches; the window readers must render their estimates
+    (and error receipts) as SQL NULL — not NaN — and still answer the
+    populated group."""
+    from p2pddsketch_spark.operators.harness import pair_extractor
+    from p2pddsketch_spark.sketches.ecm import EcmSketch
+    from p2pddsketch_spark.sketches.eh import ExpHistogram
+    from p2pddsketch_spark.sketches.sliding_hll import SlidingHyperLogLog
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", 1, 10), ("a", 2, 20), ("a", 1, 30), ("b", None, None)],
+        "source string, user_id long, ts long").repartition(1) \
+        .write.parquet(src)
+    specs = [
+        SketchSpec("shll", lambda: SlidingHyperLogLog(p=12),
+                   pair_extractor("user_id", "ts")),
+        SketchSpec("ecm", lambda: EcmSketch(depth=4, width=64, k=8),
+                   pair_extractor("user_id", "ts")),
+        SketchSpec("eh", lambda: ExpHistogram(k=8),
+                   scalar_int_extractor("ts")),
+    ]
+    state = str(tmp_path / "state")
+    R.rollup_update(spark, src, state, specs, group_cols=("source",),
+                    salt_buckets=2)
+    reads = {
+        "shll": (R.rollup_window_cardinality(spark, state, [100]),
+                 ["estimate"]),
+        "eh": (R.rollup_window_rows(spark, state, [100]),
+               ["estimate", "err_bound"]),
+        "ecm": (R.rollup_window_counts(spark, state, [1, 2], [100]),
+                ["estimate", "err_bound"]),
+    }
+    for name, (df, cols) in reads.items():
+        rows = df.collect()
+        got = {r["source"] for r in rows}
+        assert got == {"a", "b"}, name
+        for r in rows:
+            for c in cols:
+                if r["source"] == "b":
+                    assert r[c] is None, (name, c)
+                else:
+                    assert r[c] is not None and r[c] == r[c], (name, c)
+
+
+def test_window_read_job_ceiling(spark, tmp_path):
+    """One trailing-window quantile read (state lookup, plan and
+    collect) runs at most 4 Spark jobs: reading stored blobs must stay
+    a fixed, small cost however the decode stage is written."""
+    from p2pddsketch_spark.operators.harness import vpair_extractor
+    from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(g, float(v), v * 10) for g in ("a", "b") for v in range(1, 50)],
+        "source string, value double, ts long").repartition(2) \
+        .write.parquet(src)
+    state = str(tmp_path / "state")
+    R.rollup_update(spark, src, state,
+                    [SketchSpec("wdds",
+                                lambda: WindowedDDSketch(
+                                    alpha=0.01, bucket_width=100,
+                                    max_buckets=64),
+                                vpair_extractor("value", "ts"))],
+                    group_cols=("source",), salt_buckets=2)
+    sc = spark.sparkContext
+    group = "rollup-window-read-ceiling"
+    sc.setJobGroup(group, group)
+    try:
+        pdf = R.rollup_window_quantiles(spark, state, [0.5, 0.99],
+                                        [200]).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(pdf) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
