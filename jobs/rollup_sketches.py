@@ -167,90 +167,59 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    up = sub.add_parser("update", help="advance the rollup by new files")
-    up.add_argument("--input", required=True)
-    up.add_argument("--state", required=True)
-    up.add_argument("--group-cols", default="",
-                    help="comma-separated grouping columns (may be empty)")
-    up.add_argument("--value-col", default="n_tok")
-    up.add_argument("--tokens-col", default=None)
-    up.add_argument("--alpha", type=float, default=0.01)
-    up.add_argument("--hll-p", type=int, default=14)
-    up.add_argument("--salt-buckets", type=int, default=8)
-    up.add_argument("--files-per-task", type=int, default=4)
-    up.add_argument("--ss-k", type=int, default=64,
-                    help="SpaceSaving capacity (spacesaving family)")
-    up.add_argument("--ts-col", default=None,
-                    help="event-time column (required by the sliding "
-                    "families shll/ecm/eh)")
-    up.add_argument("--eh-k", type=int, default=32,
-                    help="exponential-histogram k (eh/ecm families)")
-    up.add_argument("--ecm-width", type=int, default=2048,
-                    help="ECM count-min width (ecm family)")
-    up.add_argument("--ts-unit", default="us", choices=["us", "ms", "s"],
-                    help="native unit of --ts-col (scales --wdds-bucket "
-                    "suffixes; Spark timestamp columns are us)")
-    up.add_argument("--wdds-bucket", default="1h",
-                    help="windowed-DDSketch time-bucket width (int in "
-                    "native units, or s/m/h/d suffix scaled by --ts-unit)")
-    up.add_argument("--wdds-max-buckets", type=int, default=1024,
-                    help="windowed-DDSketch live-bucket retention cap "
-                    "(older buckets fold into the full-history tail)")
-    up.add_argument("--wss-bucket", default="1h",
-                    help="windowed-SpaceSaving time-bucket width (int "
-                    "in native units, or s/m/h/d suffix scaled by "
-                    "--ts-unit)")
-    up.add_argument("--wss-max-buckets", type=int, default=1024,
-                    help="windowed-SpaceSaving live-bucket retention "
-                    "cap (older buckets fold into the full-history "
-                    "tail)")
-    up.add_argument("--sketches", default=None,
-                    help="comma-separated sketch families to build "
-                    "(default: dds, plus hll when --tokens-col is given)")
+    # flags shared by the two maintenance commands (update / stream)
+    build = argparse.ArgumentParser(add_help=False)
+    build.add_argument("--input", required=True)
+    build.add_argument("--state", required=True)
+    build.add_argument("--group-cols", default="",
+                       help="comma-separated grouping columns (may be empty)")
+    build.add_argument("--value-col", default="n_tok")
+    build.add_argument("--tokens-col", default=None)
+    build.add_argument("--alpha", type=float, default=0.01)
+    build.add_argument("--hll-p", type=int, default=14)
+    build.add_argument("--salt-buckets", type=int, default=8)
+    build.add_argument("--ss-k", type=int, default=64,
+                       help="SpaceSaving capacity (spacesaving family)")
+    build.add_argument("--ts-col", default=None,
+                       help="event-time column (required by the sliding "
+                       "families shll/ecm/eh)")
+    build.add_argument("--eh-k", type=int, default=32,
+                       help="exponential-histogram k (eh/ecm families)")
+    build.add_argument("--ecm-width", type=int, default=2048,
+                       help="ECM count-min width (ecm family)")
+    build.add_argument("--ts-unit", default="us", choices=["us", "ms", "s"],
+                       help="native unit of --ts-col (scales --wdds-bucket "
+                       "suffixes; Spark timestamp columns are us)")
+    build.add_argument("--wdds-bucket", default="1h",
+                       help="windowed-DDSketch time-bucket width (int in "
+                       "native units, or s/m/h/d suffix scaled by "
+                       "--ts-unit)")
+    build.add_argument("--wdds-max-buckets", type=int, default=1024,
+                       help="windowed-DDSketch live-bucket retention cap "
+                       "(older buckets fold into the full-history tail)")
+    build.add_argument("--wss-bucket", default="1h",
+                       help="windowed-SpaceSaving time-bucket width (int "
+                       "in native units, or s/m/h/d suffix scaled by "
+                       "--ts-unit)")
+    build.add_argument("--wss-max-buckets", type=int, default=1024,
+                       help="windowed-SpaceSaving live-bucket retention "
+                       "cap (older buckets fold into the full-history "
+                       "tail)")
+    build.add_argument("--sketches", default=None,
+                       help="comma-separated sketch families to build "
+                       "(default: dds, plus hll when --tokens-col is "
+                       "given)")
 
-    st = sub.add_parser("stream", help="advance the rollup continuously "
+    up = sub.add_parser("update", parents=[build],
+                        help="advance the rollup by new files")
+    up.add_argument("--files-per-task", type=int, default=4)
+
+    st = sub.add_parser("stream", parents=[build],
+                        help="advance the rollup continuously "
                         "(availableNow streaming pass over a drop dir)")
-    st.add_argument("--input", required=True)
-    st.add_argument("--state", required=True)
     st.add_argument("--checkpoint", required=True,
                     help="streaming checkpoint dir (the discovery ledger)")
-    st.add_argument("--group-cols", default="",
-                    help="comma-separated grouping columns (may be empty)")
-    st.add_argument("--value-col", default="n_tok")
-    st.add_argument("--tokens-col", default=None)
-    st.add_argument("--alpha", type=float, default=0.01)
-    st.add_argument("--hll-p", type=int, default=14)
-    st.add_argument("--salt-buckets", type=int, default=8)
     st.add_argument("--max-files-per-trigger", type=int, default=None)
-    st.add_argument("--ss-k", type=int, default=64,
-                    help="SpaceSaving capacity (spacesaving family)")
-    st.add_argument("--ts-col", default=None,
-                    help="event-time column (required by the sliding "
-                    "families shll/ecm/eh)")
-    st.add_argument("--eh-k", type=int, default=32,
-                    help="exponential-histogram k (eh/ecm families)")
-    st.add_argument("--ecm-width", type=int, default=2048,
-                    help="ECM count-min width (ecm family)")
-    st.add_argument("--ts-unit", default="us", choices=["us", "ms", "s"],
-                    help="native unit of --ts-col (scales --wdds-bucket "
-                    "suffixes; Spark timestamp columns are us)")
-    st.add_argument("--wdds-bucket", default="1h",
-                    help="windowed-DDSketch time-bucket width (int in "
-                    "native units, or s/m/h/d suffix scaled by --ts-unit)")
-    st.add_argument("--wdds-max-buckets", type=int, default=1024,
-                    help="windowed-DDSketch live-bucket retention cap "
-                    "(older buckets fold into the full-history tail)")
-    st.add_argument("--wss-bucket", default="1h",
-                    help="windowed-SpaceSaving time-bucket width (int "
-                    "in native units, or s/m/h/d suffix scaled by "
-                    "--ts-unit)")
-    st.add_argument("--wss-max-buckets", type=int, default=1024,
-                    help="windowed-SpaceSaving live-bucket retention "
-                    "cap (older buckets fold into the full-history "
-                    "tail)")
-    st.add_argument("--sketches", default=None,
-                    help="comma-separated sketch families to build "
-                    "(default: dds, plus hll when --tokens-col is given)")
 
     mg = sub.add_parser("merge", help="fold N independently-built "
                         "warehouse states into a fresh one (multi-"

@@ -411,14 +411,10 @@ def _partial_schema(df: DataFrame, group_cols: tuple[str, ...]) -> StructType:
 
 def _make_stage1(specs: list[SketchSpec], group_cols: tuple[str, ...],
                  salt_buckets: int, out_schema: StructType):
-    arrow_schema = pa.schema([
-        pa.field(f.name, pa.from_numpy_dtype(np.dtype("int32")) if isinstance(f.dataType, IntegerType)
-                 else pa.from_numpy_dtype(np.dtype("int64")) if isinstance(f.dataType, LongType)
-                 else pa.float64() if isinstance(f.dataType, DoubleType)
-                 else pa.binary() if isinstance(f.dataType, BinaryType)
-                 else pa.string())
-        for f in out_schema.fields
-    ])
+    from pyspark.sql.pandas.types import to_arrow_schema
+    # every field nullable: the zero-row marker emits NULL group values
+    arrow_schema = pa.schema([f.with_nullable(True)
+                              for f in to_arrow_schema(out_schema)])
     # read here, on the driver, so the cap ships with the stage closure
     counts_cap = _TASK_COUNTS_MAX
 
@@ -821,14 +817,14 @@ def final_sketches(partials: DataFrame, group_cols: tuple[str, ...] = (),
                    driver_max_bytes: int = 64 << 20) -> dict:
     """Final merge with an automatic driver/shuffle switch.
 
-    Probes the stage-1 output with `limit(max+1).collect()` — when the
-    partial count is interactive-small the probe already IS the complete
-    partial set (one job, no second pass, no cache), and the blobs fold
-    driver-side. If the probe hits the limit or carries too many bytes,
-    the salted shuffle merge tree (`merge_partials`) runs instead and
-    only the final one-row-per-(group, spec) results are collected — the
-    10^5+-partial regime where funnelling every (partition × group) blob
-    through the driver would bottleneck.
+    Materializes stage 1 once (`localCheckpoint`), then reads the
+    partial count and total blob bytes from one aggregate over the
+    checkpoint. When both are interactive-small the checkpointed
+    partials are collected and the blobs fold driver-side; otherwise
+    the salted shuffle merge tree (`merge_partials`) runs over the
+    checkpoint and only the final one-row-per-(group, spec) results are
+    collected — the 10^5+-partial regime where funnelling every
+    (partition × group) blob through the driver would bottleneck.
 
     Replaces the unconditional driver fold the round-1 harness queries
     shipped with; the threshold is partials-count AND bytes so a few

@@ -37,6 +37,15 @@ spec compatibility is enforced by comparing each spec's serialized
 ZERO-state signature (captures alpha / p / width / seed — any parameter
 that changes the wire state), not just its name.
 
+One commit path serves every writer. Sketch merge is fully mergeable,
+so update, both stream maintainers, dedup ingest, state merge and
+restore all have one shape: stored blobs plus new partials, one merge,
+one publish. `_publish` is the only manifest-last commit (blob write,
+one aggregate over the published table for the manifest totals, then
+the manifest); `_stream_pass` is the only `availableNow` driver and
+exactly-once lineage fence; `_version_dirs` is the only `version=<k>`
+directory scan.
+
 The reference simulator restarts from scratch on failure
 (/root/reference/main.cpp:214-396 has no persistence at all); this is
 the north_rule's "resumable ... with per-partition lineage + metrics"
@@ -46,6 +55,7 @@ file-chunk lineage idea with a published, queryable state table.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -111,30 +121,35 @@ def _spec_signature(specs: list[SketchSpec]) -> dict[str, str]:
             for s in specs}
 
 
-def rollup_versions(spark: SparkSession, state_dir: str) -> list[tuple[int, dict]]:
-    """Committed (version, manifest) pairs, ascending. A `version=k`
-    directory with NO manifest.json is an aborted write — skipped; a
-    manifest that exists but fails to read/parse raises (treating
-    corruption as 'aborted' would silently serve stale state and then
-    double-merge on the next update)."""
+def _version_dirs(spark: SparkSession, state_dir: str) -> list[tuple[int, object]]:
+    """(k, Hadoop path) of every `version=<int>` directory under
+    `state_dir`, committed or aborted; [] when the dir does not exist."""
     fs, jpath = _hadoop_fs(spark, state_dir)
     if not fs.exists(jpath):
         return []
     out = []
     for status in fs.listStatus(jpath):
         name = status.getPath().getName()
-        if not name.startswith("version="):
-            continue
-        try:
-            version = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
+        if name.startswith("version="):
+            try:
+                out.append((int(name.split("=", 1)[1]), status.getPath()))
+            except ValueError:
+                pass
+    return out
+
+
+def rollup_versions(spark: SparkSession, state_dir: str) -> list[tuple[int, dict]]:
+    """Committed (version, manifest) pairs, ascending. A `version=k`
+    directory with NO manifest.json is an aborted write — skipped; a
+    manifest that exists but fails to read/parse raises (treating
+    corruption as 'aborted' would silently serve stale state and then
+    double-merge on the next update)."""
+    out = []
+    for version, _ in _version_dirs(spark, state_dir):
         mpath = _manifest_path(state_dir, version)
         mfs, mjpath = _hadoop_fs(spark, mpath)
-        if not mfs.exists(mjpath):
-            continue  # uncommitted / aborted version
-        manifest = json.loads(_read_text(spark, mpath))  # corrupt => raise
-        out.append((version, manifest))
+        if mfs.exists(mjpath):  # manifest-less: uncommitted / aborted
+            out.append((version, json.loads(_read_text(spark, mpath))))
     return sorted(out)
 
 
@@ -171,74 +186,94 @@ def _check_config(latest: tuple[int, dict] | None, spec_names: list[str],
     return set(manifest["files"])
 
 
-def _merge_and_commit(spark: SparkSession, state_dir: str, partials: DataFrame,
-                      specs: list[SketchSpec], group_cols: tuple[str, ...],
-                      latest: tuple[int, dict] | None, done: set[str],
-                      new: list[str], extra: dict | None = None,
-                      spec_names: list[str] | None = None,
-                      spec_sig: dict | None = None) -> dict:
-    """Shared commit core for batch, streaming, and state-merge
-    maintenance: fold the stored blobs into the new partials' merge
-    tree, publish version k+1 blobs, then commit with the manifest-last
-    write. `spec_names`/`spec_sig` override the specs-derived metadata
-    when the caller has only manifests, not factories (state merge)."""
-    if spec_names is None:
-        spec_names = sorted(s.name for s in specs)
-    if spec_sig is None:
-        spec_sig = _spec_signature(specs)
-    if latest is not None:
-        # stored blobs re-enter the merge tree as one extra "partition"
-        # of partials (salt 0, partition_id −2 marks from-state rows in
-        # lineage); associativity makes the result identical to a
-        # one-shot build over done ∪ new
-        prev = (spark.read.parquet(_blobs_path(state_dir, latest[0]))
-                .withColumn("salt", F.lit(0).cast("int"))
-                .withColumn("partition_id", F.lit(-2).cast("int"))
-                .withColumn("build_secs", F.lit(0.0)))
-        partials = partials.unionByName(
-            prev.select(*group_cols, *_PARTIAL_COLS))
-    merged = merge_partials(partials, group_cols)
+def _blob_totals(blobs: DataFrame) -> tuple[int, dict[str, int]]:
+    """(rows, {sketch_name: Σ rows_seen}) of a blob table from ONE
+    aggregate: the manifest's `n_blob_rows` and `rows_seen_total`."""
+    rows = (blobs.groupBy("sketch_name")
+            .agg(F.count("*").alias("n"), F.sum("rows_seen").alias("total"))
+            .collect())
+    return (sum(int(r["n"]) for r in rows),
+            {r["sketch_name"]: int(r["total"]) for r in rows})
 
-    version = (latest[0] + 1) if latest else 1
-    out = merged.select(*group_cols, "sketch_name", "rows_seen", "sketch")
+
+def _publish(spark: SparkSession, state_dir: str, version: int,
+             blobs: DataFrame, fields: dict,
+             expect: tuple[int, dict] | None = None) -> int:
+    """The one manifest-last commit every writer goes through: write
+    `blobs` as `version=<k>/blobs`, total the PUBLISHED parquet, then
+    write the manifest (`fields` plus the totals) LAST. `expect` is a
+    restore's (source version, source manifest): a copy whose totals
+    disagree with it raises before any manifest exists. Returns the
+    blob row count."""
+    path = _blobs_path(state_dir, version)
     # "overwrite", not "errorifexists": this version number can only
     # collide with an ABORTED previous attempt (a committed one would
     # have advanced _latest), and retrying over its half-written blobs
     # is exactly the recovery path the manifest-last protocol promises
-    out.write.mode("overwrite").parquet(_blobs_path(state_dir, version))
-    # aggregate the PUBLISHED parquet, not `out` — re-counting the plan
-    # would recompute the merge tree twice over; the blob table is tiny
-    # (|groups| × |specs| rows) so these are metadata-cost jobs
-    published = spark.read.parquet(_blobs_path(state_dir, version))
-    n_rows = published.count()
-    n_groups = n_rows // max(len(spec_names), 1)
-    # the north rule's metrics leg: cumulative rows folded into each
-    # sketch family, recorded per version — deltas between manifests
-    # give per-update ingest volume with no extra input scan
-    rows_seen = {r["sketch_name"]: int(r["total"]) for r in
-                 (published.groupBy("sketch_name")
-                  .agg(F.sum("rows_seen").alias("total")).collect())}
-    manifest = {
-        "version": version,
-        "files": sorted(done | set(new)),
-        "new_files": len(new),
-        "spec_names": spec_names,
-        "spec_signatures": spec_sig,
-        "group_cols": list(group_cols),
-        "n_blob_rows": int(n_rows),
-        "rows_seen_total": rows_seen,
-        "updated_unix": time.time(),
-        "generated_by": "p2pddsketch_spark.operators.rollup",
-        **(extra or {}),
-    }
+    blobs.write.mode("overwrite").parquet(path)
+    # total the published parquet, not `blobs` — re-running its plan
+    # would recompute the merge tree; the table is |groups| × |specs|
+    # rows. rows_seen_total is the north rule's metrics leg: deltas
+    # between manifests give per-update ingest volume with no input scan
+    n_rows, rows_seen = _blob_totals(spark.read.parquet(path))
+    if expect is not None:
+        src_version, src = expect
+        if n_rows != src.get("n_blob_rows") or \
+                rows_seen != src.get("rows_seen_total"):
+            raise GenericError(
+                f"restore copy of version={src_version} does not match its "
+                f"manifest (rows {n_rows} vs {src.get('n_blob_rows')}, "
+                f"rows_seen {rows_seen} vs {src.get('rows_seen_total')}) — "
+                "not committing")
+    manifest = {"version": version, "n_blob_rows": n_rows,
+                "rows_seen_total": rows_seen, "updated_unix": time.time(),
+                "generated_by": "p2pddsketch_spark.operators.rollup",
+                **fields}
     # the manifest write IS the commit point — readers ignore
     # manifest-less versions, so a crash before this line leaves the
     # previous version live and this one invisible
     _write_text(spark, _manifest_path(state_dir, version),
                 json.dumps(manifest, indent=1, sort_keys=True))
+    return n_rows
+
+
+def _state_partials(spark: SparkSession, state_dir: str, version: int,
+                    group_cols: tuple[str, ...],
+                    partition_id: int) -> DataFrame:
+    """A committed version's blobs as stage-1 partials (salt 0): they
+    re-enter a merge tree as one extra "partition", marked in lineage by
+    a negative `partition_id`."""
+    return (spark.read.parquet(_blobs_path(state_dir, version))
+            .withColumn("salt", F.lit(0).cast("int"))
+            .withColumn("partition_id", F.lit(partition_id).cast("int"))
+            .withColumn("build_secs", F.lit(0.0))
+            .select(*group_cols, *_PARTIAL_COLS))
+
+
+def _merge_and_commit(spark: SparkSession, state_dir: str, partials: DataFrame,
+                      group_cols: tuple[str, ...],
+                      latest: tuple[int, dict] | None, done: set[str],
+                      new: list[str], spec_names: list[str], spec_sig: dict,
+                      extra: dict | None = None) -> dict:
+    """Shared commit core for batch, streaming, and state-merge
+    maintenance: fold the stored blobs into the new partials' merge
+    tree and publish version k+1."""
+    if latest is not None:
+        # partition_id −2 marks from-state rows in lineage; associativity
+        # makes the result identical to a one-shot build over done ∪ new
+        partials = partials.unionByName(
+            _state_partials(spark, state_dir, latest[0], group_cols, -2))
+    merged = merge_partials(partials, group_cols)
+    version = (latest[0] + 1) if latest else 1
+    n_rows = _publish(
+        spark, state_dir, version,
+        merged.select(*group_cols, "sketch_name", "rows_seen", "sketch"),
+        {"files": sorted(done | set(new)), "new_files": len(new),
+         "spec_names": spec_names, "spec_signatures": spec_sig,
+         "group_cols": list(group_cols), **(extra or {})})
     return {"version": version, "new_files": len(new),
-            "total_files": len(done) + len(new), "groups": int(n_groups),
-            "noop": False}
+            "total_files": len(done) + len(new),
+            "groups": n_rows // max(len(spec_names), 1), "noop": False}
 
 
 def rollup_update(spark: SparkSession, input_path: str, state_dir: str,
@@ -252,8 +287,8 @@ def rollup_update(spark: SparkSession, input_path: str, state_dir: str,
     with different parameters (zero-state signatures) — since merging
     incompatible sketch sets would corrupt the warehouse."""
     latest = _latest(spark, state_dir)
-    done = _check_config(latest, sorted(s.name for s in specs),
-                         _spec_signature(specs), group_cols)
+    spec_names, spec_sig = sorted(s.name for s in specs), _spec_signature(specs)
+    done = _check_config(latest, spec_names, spec_sig, group_cols)
 
     paths = [_canon_path(p) for p in parquet_file_list(input_path)]
     new = [p for p in paths if p not in done]
@@ -264,8 +299,8 @@ def rollup_update(spark: SparkSession, input_path: str, state_dir: str,
 
     partials = build_partials_from_files(
         spark, new, specs, group_cols, salt_buckets, files_per_task)
-    return _merge_and_commit(spark, state_dir, partials, specs, group_cols,
-                             latest, done, new)
+    return _merge_and_commit(spark, state_dir, partials, group_cols, latest,
+                             done, new, spec_names, spec_sig)
 
 
 def _norm_uri(p: str) -> str:
@@ -311,6 +346,77 @@ def _source_log_files(spark: SparkSession, checkpoint_dir: str,
     return None
 
 
+_IDLE_DROP = "input dir absent or empty (producer race)"
+
+
+def _stream_pass(spark: SparkSession, input_dir: str, state_dir: str,
+                 checkpoint_dir: str | None, spec_names: list[str],
+                 spec_sig: dict, group_cols: tuple[str, ...],
+                 max_files_per_trigger: int | None, ingest) -> int | None:
+    """The one `availableNow` pass behind both stream maintainers: each
+    micro-batch is config-checked against the latest commit, resolved to
+    its files, fenced when every file is already committed, refused
+    when it mixes committed and new files, and otherwise handed to
+    `ingest(batch_df, batch_id, latest, done, files)`. Returns the number
+    of fenced batches, or None when the drop dir is verifiably absent or
+    empty and no query was started."""
+    if checkpoint_dir is None:
+        raise UsageError("checkpoint_dir is required (it is the "
+                         "exactly-once discovery ledger)")
+    # static probe for the schema the file source requires. A drop dir
+    # that VERIFIABLY doesn't exist yet / has no files yet is a routine
+    # cron race with the producer — that pass is a no-op exactly like
+    # zero new batches. The check is an explicit FS probe, NOT a broad
+    # except around schema inference: a typo'd path must keep raising
+    # loudly, or a cron'd stream job reports healthy-idle forever while
+    # ingesting nothing. Glob inputs skip the probe (exists() doesn't
+    # expand patterns) and keep the strict raise-on-no-match behavior.
+    if not any(ch in input_dir for ch in "*?[{"):
+        fs, jpath = _hadoop_fs(spark, input_dir)
+        empty = not fs.exists(jpath)
+        if not empty and fs.getFileStatus(jpath).isDirectory():
+            empty = not fs.listFiles(jpath, True).hasNext()
+        if empty:
+            return None
+    schema = spark.read.parquet(input_dir).schema
+    fenced = 0
+
+    def advance(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal fenced
+        latest = _latest(spark, state_dir)
+        done = _check_config(latest, spec_names, spec_sig, group_cols)
+        files = _source_log_files(spark, checkpoint_dir, int(batch_id))
+        if files is None:  # non-file source: pay one scan for lineage
+            files = sorted({_norm_uri(r[0]) for r in batch_df
+                            .select(F.input_file_name()).distinct().collect()})
+        overlap = [p for p in files if p in done]
+        if len(overlap) == len(files):
+            # every file already committed (or nothing to ingest): a
+            # crash-replayed or checkpoint-reset batch — fenced. The
+            # lineage-subset rule, NOT a batch-id comparison, so an
+            # interleaved batch-mode update (which advances the
+            # manifest without stream keys) can't break the fence.
+            fenced += 1
+            return
+        if overlap:
+            raise UsageError(
+                "streaming batch mixes files already in the state "
+                f"manifest (e.g. {overlap[0]!r}) with new ones: this "
+                "checkpoint's discovery ledger disagrees with the state "
+                "lineage — skipping would lose the new files, merging "
+                "would double-count the old. Use the checkpoint that "
+                "built this state, or a fresh state dir.")
+        ingest(batch_df, int(batch_id), latest, done, files)
+
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    (reader.parquet(input_dir).writeStream.foreachBatch(advance)
+     .option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True).start().awaitTermination())
+    return fenced
+
+
 def rollup_stream_update(spark: SparkSession, input_dir: str, state_dir: str,
                          specs: list[SketchSpec],
                          group_cols: tuple[str, ...] = (),
@@ -349,82 +455,44 @@ def rollup_stream_update(spark: SparkSession, input_dir: str, state_dir: str,
     loop re-reads the full dataset per run, /root/reference/main.cpp:
     214-396); this is the north_rule's "continuously maintained"
     warehouse leg on Spark's own micro-batch engine."""
-    if checkpoint_dir is None:
-        raise UsageError("checkpoint_dir is required (it is the "
-                         "exactly-once discovery ledger)")
-    spec_names = sorted(s.name for s in specs)
-    spec_sig = _spec_signature(specs)
-    # static probe for the schema the file source requires. A drop dir
-    # that VERIFIABLY doesn't exist yet / has no files yet is a routine
-    # cron race with the producer — that pass is a no-op exactly like
-    # zero new batches. The check is an explicit FS probe, NOT a broad
-    # except around schema inference: a typo'd path must keep raising
-    # loudly, or a cron'd stream job reports healthy-idle forever while
-    # ingesting nothing. Glob inputs skip the probe (exists() doesn't
-    # expand patterns) and keep the strict raise-on-no-match behavior.
-    if not any(ch in input_dir for ch in "*?[{"):
-        fs, jpath = _hadoop_fs(spark, input_dir)
-        empty = not fs.exists(jpath)
-        if not empty and fs.getFileStatus(jpath).isDirectory():
-            empty = not fs.listFiles(jpath, True).hasNext()
-        if empty:
-            latest = _latest(spark, state_dir)
-            return {"version": latest[0] if latest else 0, "batches": 0,
-                    "batches_fenced": 0, "new_files": 0,
-                    "total_files": len(latest[1]["files"]) if latest else 0,
-                    "noop": True,
-                    "reason": "input dir absent or empty (producer race)"}
-    schema = spark.read.parquet(input_dir).schema
+    spec_names, spec_sig = sorted(s.name for s in specs), _spec_signature(specs)
+    stats = {"batches": 0, "new_files": 0}
 
-    stats = {"batches": 0, "skipped": 0, "new_files": 0}
-
-    def advance(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest(spark, state_dir)
-        done = _check_config(latest, spec_names, spec_sig, group_cols)
-        files = _source_log_files(spark, checkpoint_dir, int(batch_id))
-        if files is None:  # non-file source: pay one scan for lineage
-            files = sorted({_norm_uri(r[0]) for r in batch_df
-                            .select(F.input_file_name()).distinct().collect()})
-        if not files or all(p in done for p in files):
-            # every file already committed (or nothing to ingest): a
-            # crash-replayed or checkpoint-reset batch — fenced. The
-            # lineage-subset rule, NOT a batch-id comparison, so an
-            # interleaved batch-mode update (which advances the
-            # manifest without stream keys) can't break the fence.
-            stats["skipped"] += 1
-            return
-        overlap = [p for p in files if p in done]
-        if overlap:
-            raise UsageError(
-                "streaming batch mixes files already in the rollup "
-                f"manifest (e.g. {overlap[0]!r}) with new ones: this "
-                "checkpoint's discovery ledger disagrees with the state "
-                "lineage — skipping would lose the new files, merging "
-                "would double-count the old. Use the checkpoint that "
-                "built this state, or a fresh state dir.")
+    def ingest(batch_df, batch_id, latest, done, files):
         partials = build_partials(batch_df, specs, group_cols, salt_buckets)
-        got = _merge_and_commit(
-            spark, state_dir, partials, specs, group_cols, latest, done,
-            files, extra={"stream_checkpoint": checkpoint_dir,
-                          "stream_batch_id": int(batch_id)})
+        _merge_and_commit(
+            spark, state_dir, partials, group_cols, latest, done, files,
+            spec_names, spec_sig,
+            extra={"stream_checkpoint": checkpoint_dir,
+                   "stream_batch_id": batch_id})
         stats["batches"] += 1
-        stats["new_files"] += got["new_files"]
+        stats["new_files"] += len(files)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    q = (reader.parquet(input_dir)
-         .writeStream.foreachBatch(advance)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    fenced = _stream_pass(spark, input_dir, state_dir, checkpoint_dir,
+                          spec_names, spec_sig, group_cols,
+                          max_files_per_trigger, ingest)
     latest = _latest(spark, state_dir)
-    return {"version": latest[0] if latest else 0,
-            "batches": stats["batches"],
-            "batches_fenced": stats["skipped"],
-            "new_files": stats["new_files"],
-            "total_files": len(latest[1]["files"]) if latest else 0,
-            "noop": stats["batches"] == 0}
+    out = {"version": latest[0] if latest else 0,
+           "batches": stats["batches"], "batches_fenced": fenced or 0,
+           "new_files": stats["new_files"],
+           "total_files": len(latest[1]["files"]) if latest else 0,
+           "noop": stats["batches"] == 0}
+    if fenced is None:
+        out["reason"] = _IDLE_DROP
+    return out
+
+
+def _bloom_fill(spark: SparkSession, state_dir: str,
+                version: int) -> float | None:
+    """Bit-fill ratio of the OR of a committed version's Bloom blobs;
+    None when the version stores no blob."""
+    blobs = [bytes(r["sketch"]) for r in
+             spark.read.parquet(_blobs_path(state_dir, version))
+             .select("sketch").collect()]
+    if not blobs:
+        return None
+    bf = sketch_from_bytes(merge_blobs(blobs))
+    return float(np.unpackbits(bf.bits.view(np.uint8)).mean())
 
 
 def rollup_stream_dedup(spark: SparkSession, input_dir: str, state_dir: str,
@@ -473,59 +541,20 @@ def rollup_stream_dedup(spark: SparkSession, input_dir: str, state_dir: str,
     brief's training-data firehose: raw drops in, deduped corpus +
     queryable sketch state out."""
     from p2pddsketch_spark.sketches.bloom import BloomFilter
-    if checkpoint_dir is None:
-        raise UsageError("checkpoint_dir is required (it is the "
-                         "exactly-once discovery ledger)")
     specs = [SketchSpec("bloom", lambda: BloomFilter(m_bits=m_bits, k=k),
                         scalar_int_extractor(key_col))]
-    spec_names = ["bloom"]
     spec_sig = _spec_signature(specs)
-    if not any(ch in input_dir for ch in "*?[{"):
-        fs, jpath = _hadoop_fs(spark, input_dir)
-        empty = not fs.exists(jpath)
-        if not empty and fs.getFileStatus(jpath).isDirectory():
-            empty = not fs.listFiles(jpath, True).hasNext()
-        if empty:
-            latest = _latest(spark, state_dir)
-            return {"version": latest[0] if latest else 0, "batches": 0,
-                    "batches_fenced": 0, "rows_in": 0, "rows_kept": 0,
-                    "noop": True,
-                    "reason": "input dir absent or empty (producer race)"}
-    schema = spark.read.parquet(input_dir).schema
+    stats = {"batches": 0, "rows_in": 0, "rows_kept": 0}
 
-    stats = {"batches": 0, "skipped": 0, "rows_in": 0, "rows_kept": 0}
-
-    def advance(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest(spark, state_dir)
-        done = _check_config(latest, spec_names, spec_sig, ())
-        files = _source_log_files(spark, checkpoint_dir, int(batch_id))
-        if files is None:
-            files = sorted({_norm_uri(r[0]) for r in batch_df
-                            .select(F.input_file_name()).distinct().collect()})
-        if not files or all(p in done for p in files):
-            stats["skipped"] += 1
-            return
-        overlap = [p for p in files if p in done]
-        if overlap:
-            raise UsageError(
-                "streaming batch mixes files already in the dedup state "
-                f"manifest (e.g. {overlap[0]!r}) with new ones: use the "
-                "checkpoint that built this state, or a fresh state dir.")
+    def ingest(batch_df, batch_id, latest, done, files):
         if hash_of is not None:
             batch_df = batch_df.withColumn(key_col, F.xxhash64(hash_of))
         n_in = batch_df.count()
         batch_df = batch_df.dropDuplicates([key_col])
-        have_state = latest is not None and bool(
-            spark.read.parquet(_blobs_path(state_dir, latest[0])).head(1))
-        if have_state:
-            blob = merge_blobs([bytes(r["sketch"]) for r in
-                                spark.read.parquet(
-                                    _blobs_path(state_dir, latest[0]))
-                                .select("sketch").collect()])
-            bf = sketch_from_bytes(blob)
-            fill = float(np.unpackbits(
-                bf.bits.view(np.uint8)).mean())
-            stats["fill_pct"] = round(100.0 * fill, 3)
+        fill = _bloom_fill(spark, state_dir, latest[0]) if latest else None
+        if fill is None:
+            survivors = batch_df
+        else:
             if fill > max_fill:
                 raise UsageError(
                     f"dedup Bloom state at {state_dir!r} is "
@@ -535,10 +564,8 @@ def rollup_stream_dedup(spark: SparkSession, input_dir: str, state_dir: str,
                     "into a larger m_bits state (m ≈ n·k/ln2 for "
                     "expected corpus cardinality n)")
             survivors = rollup_dedup_filter(
-                spark, batch_df, state_dir, key_col,
-                _versions=[(latest[0], latest[1])], version=latest[0])
-        else:
-            survivors = batch_df
+                spark, batch_df, state_dir, key_col, _versions=[latest],
+                version=latest[0])
         version = (latest[0] + 1) if latest else 1
         dest = out_dir.rstrip("/") + f"/ingest_version={version}"
         # the survivors plan executes exactly once (this write); the
@@ -550,41 +577,34 @@ def rollup_stream_dedup(spark: SparkSession, input_dir: str, state_dir: str,
         partials = build_partials(spark.read.parquet(dest), specs, (),
                                   salt_buckets)
         _merge_and_commit(
-            spark, state_dir, partials, specs, (), latest, done, files,
+            spark, state_dir, partials, (), latest, done, files, ["bloom"],
+            spec_sig,
             extra={"stream_checkpoint": checkpoint_dir,
-                   "stream_batch_id": int(batch_id),
+                   "stream_batch_id": batch_id,
                    "ingest_out": dest, "rows_in": int(n_in),
                    "rows_kept": int(n_kept),
-                   "state_fill_pct_before": stats.get("fill_pct", 0.0)})
+                   "state_fill_pct_before":
+                       0.0 if fill is None else round(100.0 * fill, 3)})
         stats["batches"] += 1
         stats["rows_in"] += int(n_in)
         stats["rows_kept"] += int(n_kept)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    q = (reader.parquet(input_dir)
-         .writeStream.foreachBatch(advance)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    fenced = _stream_pass(spark, input_dir, state_dir, checkpoint_dir,
+                          ["bloom"], spec_sig, (), max_files_per_trigger,
+                          ingest)
     latest = _latest(spark, state_dir)
-    fill_pct = None
-    if latest is not None:
-        blobs = [bytes(r["sketch"]) for r in
-                 spark.read.parquet(_blobs_path(state_dir, latest[0]))
-                 .select("sketch").collect()]
-        if blobs:
-            bf = sketch_from_bytes(merge_blobs(blobs))
-            fill_pct = round(
-                100.0 * float(np.unpackbits(bf.bits.view(np.uint8)).mean()),
-                3)
-    return {"version": latest[0] if latest else 0,
+    version = latest[0] if latest else 0
+    if fenced is None:
+        return {"version": version, "batches": 0, "batches_fenced": 0,
+                "rows_in": 0, "rows_kept": 0, "noop": True,
+                "reason": _IDLE_DROP}
+    fill = _bloom_fill(spark, state_dir, version) if latest else None
+    return {"version": version,
             "batches": stats["batches"],
-            "batches_fenced": stats["skipped"],
+            "batches_fenced": fenced,
             "rows_in": stats["rows_in"],
             "rows_kept": stats["rows_kept"],
-            "fill_pct": fill_pct,
+            "fill_pct": None if fill is None else round(100.0 * fill, 3),
             "noop": stats["batches"] == 0}
 
 
@@ -600,22 +620,14 @@ def rollup_prune(spark: SparkSession, state_dir: str, keep: int = 2) -> dict:
         return {"deleted": [], "kept": []}
     keep_set = {v for v, _ in versions[-keep:]}
     newest = versions[-1][0]
-    fs, jpath = _hadoop_fs(spark, state_dir)
+    fs, _ = _hadoop_fs(spark, state_dir)
     deleted = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith("version="):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
+    for v, path in _version_dirs(spark, state_dir):
         # aborted dirs NEWER than the committed tip are a retry in
         # flight — never delete those out from under a live update
-        if v in keep_set or v > newest:
-            continue
-        fs.delete(status.getPath(), True)
-        deleted.append(v)
+        if v not in keep_set and v <= newest:
+            fs.delete(path, True)
+            deleted.append(v)
     return {"deleted": sorted(deleted), "kept": sorted(keep_set)}
 
 
@@ -660,35 +672,13 @@ def rollup_restore(spark: SparkSession, state_dir: str,
             f"version {to_version} manifest is missing {missing} — "
             "refusing to restore from a corrupt source (run fsck)")
     version = tip + 1
-    (spark.read.parquet(_blobs_path(state_dir, to_version))
-     .write.mode("overwrite").parquet(_blobs_path(state_dir, version)))
-    published = spark.read.parquet(_blobs_path(state_dir, version))
-    n_rows = published.count()
-    rows_seen = {r["sketch_name"]: int(r["total"]) for r in
-                 (published.groupBy("sketch_name")
-                  .agg(F.sum("rows_seen").alias("total")).collect())}
-    if n_rows != src.get("n_blob_rows") or \
-            rows_seen != src.get("rows_seen_total"):
-        raise GenericError(
-            f"restore copy of version={to_version} does not match its "
-            f"manifest (rows {n_rows} vs {src.get('n_blob_rows')}, "
-            f"rows_seen {rows_seen} vs {src.get('rows_seen_total')}) — "
-            "not committing")
-    manifest = {
-        "version": version,
-        "restored_from": to_version,
-        "files": src["files"],
-        "new_files": 0,
-        "spec_names": src["spec_names"],
-        "spec_signatures": src["spec_signatures"],
-        "group_cols": src["group_cols"],
-        "n_blob_rows": int(n_rows),
-        "rows_seen_total": rows_seen,
-        "updated_unix": time.time(),
-        "generated_by": "p2pddsketch_spark.operators.rollup",
-    }
-    _write_text(spark, _manifest_path(state_dir, version),
-                json.dumps(manifest, indent=1, sort_keys=True))
+    _publish(spark, state_dir, version,
+             spark.read.parquet(_blobs_path(state_dir, to_version)),
+             {"restored_from": to_version, "files": src["files"],
+              "new_files": 0, "spec_names": src["spec_names"],
+              "spec_signatures": src["spec_signatures"],
+              "group_cols": src["group_cols"]},
+             expect=(to_version, src))
     return {"version": version, "restored_from": to_version,
             "total_files": len(src["files"]), "noop": False}
 
@@ -761,26 +751,17 @@ def rollup_merge_states(spark: SparkSession, source_dirs: list[str],
             "merging would double-count their rows")
 
     group_cols = tuple(first["group_cols"])
-    partials = None
-    for i, (d, v, _) in enumerate(sources):
-        src = (spark.read.parquet(_blobs_path(d, v))
-               .withColumn("salt", F.lit(0).cast("int"))
-               # distinct negative partition ids keep per-source
-               # provenance visible in lineage, mirroring the -2
-               # "from-state" marker in _merge_and_commit
-               .withColumn("partition_id", F.lit(-3 - i).cast("int"))
-               .withColumn("build_secs", F.lit(0.0))
-               .select(*group_cols, *_PARTIAL_COLS))
-        partials = src if partials is None else partials.unionByName(src)
-
+    # distinct negative partition ids keep per-source provenance visible
+    # in lineage, mirroring the -2 "from-state" marker in _merge_and_commit
+    partials = functools.reduce(DataFrame.unionByName, [
+        _state_partials(spark, d, v, group_cols, -3 - i)
+        for i, (d, v, _) in enumerate(sources)])
     stats = _merge_and_commit(
-        spark, dest_dir, partials, [], group_cols, None, set(),
-        sorted(seen),
+        spark, dest_dir, partials, group_cols, None, set(), sorted(seen),
+        first["spec_names"], first["spec_signatures"],
         extra={"merged_from": [{"state_dir": d, "version": v,
                                 "files": len(m["files"])}
-                               for d, v, m in sources]},
-        spec_names=first["spec_names"],
-        spec_sig=first["spec_signatures"])
+                               for d, v, m in sources]})
     return {"version": stats["version"], "sources": len(sources),
             "total_files": stats["total_files"],
             "groups": stats["groups"], "noop": False}
@@ -824,19 +805,9 @@ def rollup_fsck(spark: SparkSession, state_dir: str,
         return {"ok": False, "versions": [], "aborted": [],
                 "findings": [f"no committed rollup state at {state_dir!r}"]}
 
-    fs, jpath = _hadoop_fs(spark, state_dir)
     committed = {v for v, _ in versions}
-    aborted = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith("version="):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if v not in committed:
-            aborted.append(v)
+    aborted = [v for v, _ in _version_dirs(spark, state_dir)
+               if v not in committed]
 
     prev = None
     for v, m in versions:
@@ -911,7 +882,7 @@ def rollup_fsck(spark: SparkSession, state_dir: str,
         except Exception as e:
             findings.append(f"{tag}: blob table unreadable: {e}")
             continue
-        n = blobs.count()
+        n, seen_tot = _blob_totals(blobs)
         if n != m.get("n_blob_rows"):
             findings.append(
                 f"{tag}: blob rows {n} != manifest n_blob_rows "
@@ -921,9 +892,6 @@ def rollup_fsck(spark: SparkSession, state_dir: str,
             findings.append(
                 f"{tag}: blob rows {n} not a multiple of "
                 f"{n_specs} spec families (a group is missing a blob)")
-        seen_tot = {r["sketch_name"]: int(r["total"]) for r in
-                    (blobs.groupBy("sketch_name")
-                     .agg(F.sum("rows_seen").alias("total")).collect())}
         if seen_tot != m.get("rows_seen_total"):
             findings.append(
                 f"{tag}: per-family rows_seen {seen_tot} != manifest "
@@ -1409,8 +1377,8 @@ def rollup_window_drift(spark: SparkSession, state_dir: str,
     explicit `now` anchors for cumulative comparisons instead.
     Output: (group…, window, metric, current, previous, delta, ratio,
     cur_err, prev_err) where metric is 'q<q>' / 'rows'; err columns
-    carry EH's hard receipts and are NaN for wdds (its guarantee is
-    the relative α contract). ratio is NaN when previous == 0."""
+    carry EH's hard receipts and are SQL NULL for wdds (its guarantee
+    is the relative α contract). ratio is SQL NULL when previous == 0."""
     wins = [int(w) for w in windows]
     qv = [float(q) for q in (qs or [0.5, 0.99])]
 

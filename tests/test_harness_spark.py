@@ -543,3 +543,37 @@ def test_file_build_merge_shape(spark, sequences_path, salted):
     got, want = blobs(built), blobs(tree)
     assert len(got) == 4 * len(specs)
     assert got == want
+
+
+@pytest.mark.parametrize("col", ["d", "b"])
+def test_stage1_date_and_boolean_group_columns(spark, tmp_path, col):
+    """Stage 1 emits group values with the group column's own Arrow type:
+    a DATE or BOOLEAN group column builds per-group sketches on both
+    stage-1 entries (DataFrame and file list), and a zero-row partition
+    still emits its lineage marker with a NULL group value."""
+    import datetime as dt
+
+    from p2pddsketch_spark.operators.harness import (
+        EMPTY_MARKER, build_partials, build_partials_from_files,
+        final_sketches, parquet_file_list)
+    rows = [(dt.date(2024, 1, 1 + i % 3), i % 2 == 0, float(i + 1))
+            for i in range(60)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, "d date, b boolean, v double") \
+        .repartition(2).write.parquet(src)
+    spec = [SketchSpec("dds", lambda: DDSketch(alpha=0.01, bin_limit=1 << 20),
+                       scalar_extractor("v"))]
+    key = {"d": 0, "b": 1}[col]
+    exact: dict = {}
+    for r in rows:
+        exact[r[key]] = exact.get(r[key], 0) + 1
+    df = spark.read.parquet(src)
+    for partials in (build_partials(df, spec, (col,), salt_buckets=2),
+                     build_partials_from_files(spark, parquet_file_list(src),
+                                               spec, (col,), salt_buckets=2)):
+        got = final_sketches(partials, (col,))
+        assert {k[0]: sk.n for k, sk in got.items()} == exact
+    marker = build_partials(df.where("v < 0"), spec, (col,),
+                            salt_buckets=2).collect()
+    assert marker and all(r["sketch_name"] == EMPTY_MARKER and r[col] is None
+                          for r in marker)

@@ -2574,6 +2574,26 @@ def test_window_readers_all_null_group_is_sql_null(spark, tmp_path):
                     assert r[c] is None, (name, c)
                 else:
                     assert r[c] is not None and r[c] == r[c], (name, c)
+    # adjacent-window drift: no row precedes either group's current
+    # window, so previous == 0 and ratio is SQL NULL
+    drift = R.rollup_window_drift(spark, state, [100], "eh").collect()
+    assert {r["source"] for r in drift} == {"a", "b"}
+    assert all(r["previous"] == 0 and r["ratio"] is None for r in drift)
+    # wdds drift carries no hard receipts: both err columns are SQL NULL
+    from p2pddsketch_spark.operators.harness import vpair_extractor
+    from p2pddsketch_spark.sketches.wdds import WindowedDDSketch
+    wstate = str(tmp_path / "wstate")
+    R.rollup_update(spark, src, wstate,
+                    [SketchSpec("wdds",
+                                lambda: WindowedDDSketch(
+                                    alpha=0.01, bucket_width=10,
+                                    max_buckets=64),
+                                vpair_extractor("user_id", "ts"))],
+                    group_cols=("source",), salt_buckets=2)
+    wdrift = R.rollup_window_drift(spark, wstate, [10], qs=[0.5]).collect()
+    assert {r["source"] for r in wdrift} == {"a", "b"}
+    assert all(r["cur_err"] is None and r["prev_err"] is None
+               for r in wdrift)
 
 
 def test_window_read_job_ceiling(spark, tmp_path):
@@ -2606,3 +2626,105 @@ def test_window_read_job_ceiling(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(pdf) == 4
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
+# ------------------------------------------------------ one write path
+
+def _key_file(spark, tmp_path, drop, name, lo, hi):
+    """Drop one single-file parquet of int64 keys [lo, hi) into `drop`."""
+    import os
+    stage = str(tmp_path / f"stage_{name}")
+    (spark.createDataFrame([(int(k),) for k in range(lo, hi)], "key long")
+     .coalesce(1).write.parquet(stage))
+    src = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    shutil.copy(os.path.join(stage, src), f"{drop}/{name}.parquet")
+
+
+def test_stream_dedup_empty_drop_dir_is_noop(spark, tmp_path):
+    """The dedup ingest shares the stream pass's producer-race rule: an
+    absent or empty drop dir is a no-op with the dedup stats shape, a
+    glob that matches nothing raises, and a missing checkpoint dir is a
+    usage error."""
+    import os
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    for d in (str(tmp_path / "absent"), empty):
+        got = R.rollup_stream_dedup(
+            spark, d, str(tmp_path / "state"), str(tmp_path / "out"),
+            key_col="key", checkpoint_dir=str(tmp_path / "ck"))
+        assert got == {"version": 0, "batches": 0, "batches_fenced": 0,
+                       "rows_in": 0, "rows_kept": 0, "noop": True,
+                       "reason": "input dir absent or empty "
+                                 "(producer race)"}
+    from pyspark.errors import AnalysisException
+    with pytest.raises(AnalysisException):
+        R.rollup_stream_dedup(
+            spark, str(tmp_path / "nope-*"), str(tmp_path / "state"),
+            str(tmp_path / "out"), key_col="key",
+            checkpoint_dir=str(tmp_path / "ck2"))
+    with pytest.raises(UsageError, match="checkpoint_dir is required"):
+        R.rollup_stream_dedup(spark, empty, str(tmp_path / "state"),
+                              str(tmp_path / "out"), key_col="key")
+    with pytest.raises(UsageError, match="checkpoint_dir is required"):
+        R.rollup_stream_update(spark, empty, str(tmp_path / "state"),
+                               _specs())
+
+
+def test_stream_dedup_checkpoint_reset_fences_or_refuses(spark, tmp_path):
+    """A reset dedup checkpoint over unchanged input re-emits only
+    ingested files (fenced, nothing written); once a new file lands, the
+    mixed batch is refused and neither the state nor the corpus moves."""
+    import os
+    drop, state, out, ck = (str(tmp_path / p)
+                            for p in ("drop", "state", "out", "ck"))
+    os.makedirs(drop)
+    for i in range(3):
+        _key_file(spark, tmp_path, drop, f"f{i}", i * 50, i * 50 + 80)
+    s1 = R.rollup_stream_dedup(spark, drop, state, out, key_col="key",
+                               checkpoint_dir=ck, salt_buckets=2)
+    assert s1["batches"] == 1 and s1["rows_kept"] == 180
+    shutil.rmtree(ck)
+    s2 = R.rollup_stream_dedup(spark, drop, state, out, key_col="key",
+                               checkpoint_dir=ck, salt_buckets=2)
+    assert s2["batches"] == 0 and s2["batches_fenced"] >= 1
+    assert s2["noop"] and s2["fill_pct"] == s1["fill_pct"]
+    shutil.rmtree(ck)
+    _key_file(spark, tmp_path, drop, "f3", 500, 520)
+    versions = R.rollup_versions(spark, state)
+    blobs = {r["sketch_name"]: bytes(r["sketch"])
+             for r in R.rollup_state(spark, state).collect()}
+    with pytest.raises(Exception, match="mixes files already"):
+        R.rollup_stream_dedup(spark, drop, state, out, key_col="key",
+                              checkpoint_dir=ck, salt_buckets=2)
+    assert R.rollup_versions(spark, state) == versions
+    assert {r["sketch_name"]: bytes(r["sketch"])
+            for r in R.rollup_state(spark, state).collect()} == blobs
+    assert spark.read.parquet(out).count() == 180
+
+
+def test_update_over_committed_state_job_ceiling(spark, seq_dir, tmp_path):
+    """An incremental update over one committed version (stage 1 over
+    the new files, the merge with the stored blobs, the blob write and
+    one aggregate over the published table for the manifest) runs at
+    most 8 Spark jobs."""
+    import os
+    drop = str(tmp_path / "drop")
+    os.makedirs(drop)
+    files = parquet_file_list(seq_dir)
+    for f in files[:4]:
+        shutil.copy(f, drop)
+    state = str(tmp_path / "state")
+    R.rollup_update(spark, drop, state, _specs(), group_cols=("source",),
+                    salt_buckets=4)
+    for f in files[4:]:
+        shutil.copy(f, drop)
+    sc = spark.sparkContext
+    group = "rollup-update-ceiling"
+    sc.setJobGroup(group, group)
+    try:
+        got = R.rollup_update(spark, drop, state, _specs(),
+                              group_cols=("source",), salt_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got["version"] == 2 and got["new_files"] == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
