@@ -32,6 +32,8 @@ computes it exactly in two deterministic steps.
 
 from __future__ import annotations
 
+import json
+import logging
 import time
 from dataclasses import dataclass, field
 from typing import Callable, Iterator
@@ -39,10 +41,13 @@ from typing import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
-                               LongType, StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, ByteType,
+                               DataType, DateType, DecimalType, DoubleType,
+                               FloatType, IntegerType, LongType, MapType,
+                               ShortType, StringType, StructField, StructType,
+                               TimestampNTZType, TimestampType)
 
 from p2pddsketch_spark.sketches.ddsketch import DDSketch
 from p2pddsketch_spark.sketches.hll import HyperLogLog
@@ -72,6 +77,8 @@ __all__ = ["SketchSpec", "scalar_extractor", "array_extractor",
            "build_sketches_from_files", "build_partials_from_files",
            "parquet_file_list", "collect_sketches", "merge_blobs",
            "final_sketches", "sketch_from_bytes", "SKETCH_TYPES", "EMPTY_MARKER"]
+
+_log = logging.getLogger(__name__)
 
 # sketch_name of the zero-row marker a stage-1 task emits when its
 # partition contained no rows: the row carries lineage (partition_id →
@@ -404,8 +411,8 @@ _FIXED_FIELDS = [
 ]
 
 
-def _partial_schema(df: DataFrame, group_cols: tuple[str, ...]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
+def _partial_schema(schema: StructType, group_cols: tuple[str, ...]) -> StructType:
+    fields = [schema[c] for c in group_cols]
     return StructType(list(fields) + _FIXED_FIELDS)
 
 
@@ -632,9 +639,8 @@ def build_partials_from_files(spark: SparkSession, paths: list[str],
     import pyarrow.parquet as pq
 
     needed = sorted({c for s in specs for c in s.columns} | set(group_cols))
-    # schema of the pruned projection, for _partial_schema
-    probe = spark.read.parquet(paths[0]).select(*needed)
-    out_schema = _partial_schema(probe, group_cols)
+    in_schema = _footer_schema(spark, paths[0])
+    out_schema = _partial_schema(in_schema, group_cols)
     build = _make_stage1(specs, group_cols, salt_buckets, out_schema)
 
     # `split_within_files=False` pins the task list to exactly one
@@ -648,7 +654,7 @@ def build_partials_from_files(spark: SparkSession, paths: list[str],
     # the token-ARRAY workloads' mmap-churn cliff (large per-batch list
     # allocations); a few plain numeric/string columns at 32k rows are
     # a couple hundred KB and the per-batch Python overhead dominates
-    if not any(isinstance(f.dataType, ArrayType) for f in probe.schema.fields):
+    if not any(isinstance(in_schema[c].dataType, ArrayType) for c in needed):
         batch_size = max(batch_size, 32_768)
     # spark.range with numPartitions == len(chunks) puts EXACTLY one chunk
     # id in each partition — no round-robin skew in file→task assignment
@@ -703,6 +709,75 @@ def parquet_file_list(path: str) -> list[str]:
     return files
 
 
+# the footer key under which Spark's parquet writer stores the exact
+# schema it wrote; Spark's own inference prefers it to the parquet types
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Spark's `asNullable`: every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                           for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+# the only leaf types Spark's parquet inference yields; pyarrow maps
+# some footers to others (durations → intervals, all-null → NullType)
+_INFERRED_LEAVES = (BooleanType, ByteType, ShortType, IntegerType, LongType,
+                    FloatType, DoubleType, DecimalType, StringType, BinaryType,
+                    DateType, TimestampType, TimestampNTZType)
+
+
+def _spark_infers(dt: DataType) -> bool:
+    if isinstance(dt, StructType):
+        return all(_spark_infers(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _spark_infers(dt.elementType)
+    if isinstance(dt, MapType):
+        return _spark_infers(dt.keyType) and _spark_infers(dt.valueType)
+    return isinstance(dt, _INFERRED_LEAVES)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema `spark.read.parquet(path)` would infer, read on the
+    driver from the first data file's footer instead of by a Spark job;
+    `spark.read.schema(_footer_schema(spark, p)).parquet(p)` then plans
+    with no job at all.
+
+    The schema a Spark writer stored in the footer is taken as is; else
+    the Arrow schema pyarrow reads from the footer (rebuilt from its
+    stored `ARROW:schema` when there is one) is mapped with tz-less
+    timestamps as TimestampNTZ, every field forced nullable. What that
+    cannot match is left to Spark's inference, one job: a URI path
+    (only Spark's filesystems resolve it), INT96 timestamps, columns
+    pyspark cannot map (unsigned, half-float) and columns that map to a
+    type Spark's inference never yields (a duration, an all-null
+    column)."""
+    import pyarrow.parquet as pq
+    from urllib.parse import urlparse
+    from pyspark.sql.pandas.types import from_arrow_schema
+    if urlparse(path).scheme:
+        return spark.read.parquet(path).schema
+    meta = pq.read_metadata(parquet_file_list(path)[0])
+    stored = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        return _as_nullable(StructType.fromJson(json.loads(stored)))
+    if all(c.physical_type != "INT96" for c in meta.schema):
+        try:
+            mapped = from_arrow_schema(meta.schema.to_arrow_schema(),
+                                       prefer_timestamp_ntz=True)
+        except TypeError:
+            mapped = None
+        if mapped is not None and _spark_infers(mapped):
+            return _as_nullable(mapped)
+    return spark.read.parquet(path).schema
+
+
 # don't bother spreading inputs smaller than this: the repartition
 # shuffle + 32-way tiny partials cost more than the serial build saves
 # (measured +~1 s per 50k-row micro-batch on the stream-dedup path)
@@ -749,7 +824,7 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
     is still never shuffled there. Non-file-backed frames (views,
     foreachBatch micro-batches) report no files and keep their layout."""
     needed = sorted({c for s in specs for c in s.columns} | set(group_cols))
-    out_schema = _partial_schema(df, group_cols)
+    out_schema = _partial_schema(df.schema, group_cols)
     pruned = df.select(*needed)
     par = max(1, int(df.sparkSession.sparkContext.defaultParallelism))
     try:
@@ -817,33 +892,37 @@ def final_sketches(partials: DataFrame, group_cols: tuple[str, ...] = (),
                    driver_max_bytes: int = 64 << 20) -> dict:
     """Final merge with an automatic driver/shuffle switch.
 
-    Materializes stage 1 once (`localCheckpoint`), then reads the
-    partial count and total blob bytes from one aggregate over the
-    checkpoint. When both are interactive-small the checkpointed
-    partials are collected and the blobs fold driver-side; otherwise
-    the salted shuffle merge tree (`merge_partials`) runs over the
-    checkpoint and only the final one-row-per-(group, spec) results are
-    collected — the 10^5+-partial regime where funnelling every
-    (partition × group) blob through the driver would bottleneck.
+    Materializes stage 1 once (`localCheckpoint`, one job) and reads the
+    partial count and total blob bytes from an `Observation` on that
+    same job, so deciding costs no extra pass over the partials. When
+    both are interactive-small the checkpointed partials are collected
+    and the blobs fold driver-side (2 jobs in all); otherwise the salted
+    shuffle merge tree (`merge_partials`) runs over the checkpoint and
+    only the final one-row-per-(group, spec) results are collected —
+    the 10^5+-partial regime where funnelling every (partition × group)
+    blob through the driver would bottleneck. The chosen route is
+    logged at INFO with the two numbers that chose it.
 
-    Replaces the unconditional driver fold the round-1 harness queries
-    shipped with; the threshold is partials-count AND bytes so a few
-    huge DDSketch blobs (bin_limit 2^22) also route through the tree.
+    The threshold is partials-count AND bytes so a few huge DDSketch
+    blobs (bin_limit 2^22) also route through the tree.
     Returns {(group..., name): sketch} either way.
     """
-    # Materialize stage 1 EXACTLY ONCE with a fully-parallel job
-    # (localCheckpoint), then decide from a cheap cached aggregate.
-    # Replaces round 2's CollectLimit probe, which (a) mutated the
-    # session-global spark.sql.limit.initialNumPartitions around the
-    # collect — visible to concurrent queries on a shared session — and
-    # (b) re-executed stage 1 a second time whenever the merge tree won.
-    # The checkpoint blocks are freed by the ContextCleaner once the
-    # DataFrame goes out of scope.
-    mat = partials.localCheckpoint(eager=True)
-    n, nbytes = mat.agg(
-        F.count("*"),
-        F.coalesce(F.sum(F.length("sketch")), F.lit(0))).first()
-    if n <= driver_max_partials and nbytes <= driver_max_bytes:
+    # Materialize stage 1 EXACTLY ONCE with a fully-parallel job, so the
+    # merge tree never re-executes it. The Observation is unnamed (a
+    # fresh UUID name), so concurrent calls on one session cannot
+    # collide; the checkpoint blocks are freed by the ContextCleaner
+    # once the DataFrame goes out of scope.
+    obs = Observation()
+    mat = partials.observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.length("sketch")), F.lit(0)).alias("bytes")
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    n, nbytes = int(m["n"]), int(m["bytes"])
+    driver = n <= driver_max_partials and nbytes <= driver_max_bytes
+    _log.info("final_sketches: %s over %d partials, %d bytes",
+              "driver fold" if driver else "merge tree", n, nbytes)
+    if driver:
         rows = mat.select(*group_cols, "sketch_name", "sketch").collect()
         return _merge_partial_rows(rows, group_cols)
     return collect_sketches(merge_partials(mat, group_cols), group_cols)

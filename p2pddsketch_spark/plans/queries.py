@@ -6,13 +6,19 @@ that match the DuckDB oracle SQL twins in `plans/oracles.py`.
 
 from __future__ import annotations
 
+from datetime import timezone
+
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampNTZType, TimestampType
 
+from p2pddsketch_spark.errors import GenericError
 from p2pddsketch_spark.functions.ddsql import ddsketch_quantile_plan, gamma_of_alpha
-from p2pddsketch_spark.operators.harness import (SketchSpec, array_extractor,
+from p2pddsketch_spark.operators.harness import (SketchSpec, _footer_schema,
+                                                 array_extractor,
                                                  build_sketches,
                                                  collect_sketches,
                                                  scalar_extractor)
@@ -28,7 +34,43 @@ QS = [0.5, 0.95, 0.99, 0.999]
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """`spark.read.parquet` of `<sf_dir>/<table>.parquet` with the schema
+    read from the parquet footer (`harness._footer_schema`), so loading
+    plans without the schema-inference job."""
+    path = f"{sf_dir}/{table}.parquet"
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
+
+
+def _sort_key(v):
+    """Spark's ascending order for one value: NULL first, NaN above
+    +inf, -0.0 equal to 0.0; strings by code point, as UTF-8 bytes
+    compare."""
+    nan = v is not None and v != v
+    return (v is not None, nan, 0 if v is None or nan else v)
+
+
+def _result_frame(spark: SparkSession, rows, schema: str, *order: str) -> DataFrame:
+    """A result built from driver rows, in the order
+    `spark.createDataFrame(rows, schema).orderBy(*order)` returns it,
+    but sorted here in Python and handed over as an Arrow table: the
+    frame is a LocalRelation, so collecting it runs no Spark job.
+
+    Naive datetimes in TIMESTAMP columns are local time, as
+    `createDataFrame` reads them; they are converted to UTC first, since
+    Arrow would read their wall clock as UTC."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    st = StructType.fromDDL(schema)
+    zoned = [i for i, f in enumerate(st.fields) if isinstance(f.dataType, TimestampType)]
+    rows = [tuple(r) for r in rows]
+    if zoned:
+        rows = [tuple(v.astimezone(timezone.utc) if i in zoned and v is not None else v
+                      for i, v in enumerate(r)) for r in rows]
+    for c in reversed(order):       # stable sorts, last key first
+        i = st.names.index(c)
+        rows.sort(key=lambda r: _sort_key(r[i]))
+    table = pa.Table.from_pylist([dict(zip(st.names, r)) for r in rows],
+                                 schema=to_arrow_schema(st))
+    return spark.createDataFrame(table, st)
 
 
 # ------------------------------------------------- DDSketch via the harness
@@ -60,8 +102,7 @@ def _ddsketch_quantile_rows(spark: SparkSession, df: DataFrame,
             rows.append(tuple(gvals) + (float(q), k_unsigned, est, int(sk.n)))
     gddl = "".join(f"{c} {df.schema[c].dataType.simpleString()}, " for c in group_cols)
     schema = f"{gddl}q double, bucket_key long, estimate double, n long"
-    res = spark.createDataFrame(rows, schema)
-    return res.orderBy(*group_cols, "q")
+    return _result_frame(spark, rows, schema, *group_cols, "q")
 
 
 def ddsketch_quantiles_via_harness(spark: SparkSession, df: DataFrame,
@@ -213,8 +254,13 @@ def q_dds_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NTZ timestamps, so the output strings are identical, but the
     # per-row string build (1M format calls at sf1.0) and the string
     # group keys drop out of the scan stage (round-6, guide §2.3)
-    ev = load(spark, sf_dir, "events").withColumn(
-        "_hb", F.date_trunc("hour", F.col("ts")))
+    ev = load(spark, sf_dir, "events")
+    if not isinstance(ev.schema["ts"].dataType, TimestampNTZType):
+        # a zoned ts would make the hour buckets depend on the session
+        # time zone, and a DST fall-back hour would emit two rows
+        raise GenericError("q_dds_events_hourly needs events.ts as "
+                           f"TIMESTAMP_NTZ, got {ev.schema['ts'].dataType}")
+    ev = ev.withColumn("_hb", F.date_trunc("hour", F.col("ts")))
     out = ddsketch_quantile_plan(ev, "value", [0.95], alpha=0.01,
                                  group_cols=("_hb",))
     return (out.select(F.date_format("_hb", "yyyy-MM-dd HH:00:00")
@@ -925,8 +971,7 @@ def q_kmeans_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cent = kmeans_fit_distributed(emb, k=1, iters=1)
     rows = [(i, float(np.round(v, 6))) for i, v in enumerate(cent[0])]
-    return (spark.createDataFrame(rows, "dim int, c double")
-            .orderBy("dim"))
+    return _result_frame(spark, rows, "dim int, c double", "dim")
 
 
 def q_heavy_users_spacesaving(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,8 +990,7 @@ def q_heavy_users_spacesaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     sk = collect_sketches(out)["ss"]
     rows = sorted(((int(item), int(cnt)) for item, cnt, _ in sk.top()),
                   key=lambda r: (-r[1], r[0]))[:10]
-    return (spark.createDataFrame(rows, "user_id long, cnt long")
-            .orderBy(F.desc("cnt"), "user_id"))
+    return _result_frame(spark, rows, "user_id long, cnt long")
 
 
 def q_fd_gram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -968,8 +1012,7 @@ def q_fd_gram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = sk.gram()
     rows = [(int(i), int(j), float(np.round(g[i, j], 6)))
             for i in range(8) for j in range(i, 8)]
-    return (spark.createDataFrame(rows, "i long, j long, gram double")
-            .orderBy("i", "j"))
+    return _result_frame(spark, rows, "i long, j long, gram double", "i", "j")
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -987,8 +1030,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=("source",), salt_buckets=8)
     sk = collect_sketches(out, group_cols=("source",))
     rows = [(key[0], int(i)) for key, s in sk.items() for i in s.sample()]
-    return (spark.createDataFrame(rows, "source string, doc_id long")
-            .orderBy("source", "doc_id"))
+    return _result_frame(spark, rows, "source string, doc_id long", "source", "doc_id")
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1017,8 +1059,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=("source",), salt_buckets=8)
     sk = collect_sketches(out, group_cols=("source",))
     rows = [(key[0], int(i)) for key, s in sk.items() for i in s.sample()]
-    return (spark.createDataFrame(rows, "source string, doc_id long")
-            .orderBy("source", "doc_id"))
+    return _result_frame(spark, rows, "source string, doc_id long", "source", "doc_id")
 
 
 def q_theta_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,9 +1085,10 @@ def q_theta_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((a, b,
                      float(np.round(thetas[a].intersection_cardinality(thetas[b]), 1)),
                      float(np.round(thetas[a].union_cardinality(thetas[b]), 1))))
-    return spark.createDataFrame(
-        rows, "source_a string, source_b string, inter_est double, union_est double"
-    ).orderBy("source_a", "source_b")
+    return _result_frame(
+        spark, rows,
+        "source_a string, source_b string, inter_est double, union_est double",
+        "source_a", "source_b")
 
 
 # ------------------------------------ estimate queries (weaker rows-only)
@@ -1091,7 +1133,7 @@ def q_sketch_estimates_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ss_top_user_count", float(sk["ss_users"].top(1)[0][1])),
         ("n_rows", float(sk["dds_value"].n)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double").orderBy("metric")
+    return _result_frame(spark, rows, "metric string, value double", "metric")
 
 
 def q_theta_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,9 +1164,10 @@ def q_theta_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                      int(np.round(sk[d].cardinality())),
                      int(np.round(sk[nxt].cardinality())),
                      int(np.round(sk[d].intersection_cardinality(sk[nxt])))))
-    return (spark.createDataFrame(
-        rows, "day string, next_day string, dau long, dau_next long, retained long")
-        .orderBy("day"))
+    return _result_frame(
+        spark, rows,
+        "day string, next_day string, dau long, dau_next long, retained long",
+        "day")
 
 
 def q_sketch_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1239,7 +1282,7 @@ def q_sketch_counts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("n_rows", float(sk["dds_value"].n)),
         ("req_value_n", float(sk["req_value"].n)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double").orderBy("metric")
+    return _result_frame(spark, rows, "metric string, value double", "metric")
 
 
 def q_streaming_dds_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1297,9 +1340,10 @@ def q_streaming_dds_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((hour, float(q), int(k_unsigned), est, int(sk.n)))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return (spark.createDataFrame(
-        rows, "hour_bucket string, q double, bucket_key long, estimate double, n long")
-        .orderBy("hour_bucket", "q"))
+    return _result_frame(
+        spark, rows,
+        "hour_bucket string, q double, bucket_key long, estimate double, n long",
+        "hour_bucket", "q")
 
 
 def _spacesaving(k: int):
@@ -1796,8 +1840,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [(r["l_id"], r["r_id"]) for r in spark.table(name).collect()]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return (spark.createDataFrame(rows or [], "l_id long, r_id long")
-            .orderBy("l_id", "r_id"))
+    return _result_frame(spark, rows or [], "l_id long, r_id long", "l_id", "r_id")
 
 
 def q_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1992,9 +2035,10 @@ def q_streaming_stateful_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
                  .orderBy("event_type").collect())
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
-        final, "event_type string, n long, p5 double, p95 double") \
-        .orderBy("event_type")
+    return _result_frame(
+        spark, final,
+        "event_type string, n long, p5 double, p95 double",
+        "event_type")
 
 
 def q_bpe_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2041,7 +2085,7 @@ def q_moments_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
                      *[int(s) for s in sk.sums]))
     schema = ("l_returnflag string, n long, zq_min long, zq_max long, "
               + ", ".join(f"s{j} long" for j in range(1, 7)))
-    return spark.createDataFrame(rows, schema).orderBy("l_returnflag")
+    return _result_frame(spark, rows, schema, "l_returnflag")
 
 
 def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2080,9 +2124,10 @@ def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [proof(src, "before"), proof(out, "after")]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return (spark.createDataFrame(
-        rows, "phase string, n_rows long, content_hash long")
-        .orderBy("phase"))
+    return _result_frame(
+        spark, rows,
+        "phase string, n_rows long, content_hash long",
+        "phase")
 
 
 def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2177,8 +2222,7 @@ def q_theta_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
             if dd in sk:
                 acc.merge(ThetaSketch.from_bytes(sk[dd].to_bytes()))
         rows.append((d, int(np.round(acc.cardinality()))))
-    return (spark.createDataFrame(rows, "window_start string, wau long")
-            .orderBy("window_start"))
+    return _result_frame(spark, rows, "window_start string, wau long", "window_start")
 
 
 # ------------------------------------------------- round-5 additions:
@@ -2240,8 +2284,7 @@ def q_ams_joinsize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("n_events", float(sa.n)),
         ("n_orders", float(sb.n)),
     ]
-    return (spark.createDataFrame(rows, "metric string, value double")
-            .orderBy("metric"))
+    return _result_frame(spark, rows, "metric string, value double", "metric")
 
 
 def q_minhash_tokens_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2337,10 +2380,11 @@ def q_wss_window_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             for rk, (item, cnt, err) in enumerate(top, start=1):
                 rows.append((et, wd, rk, int(item), int(cnt), int(err),
                              int(ncov)))
-    return (spark.createDataFrame(
-        rows, "event_type string, window_days int, rank int, "
-              "user_id long, cnt long, err long, n_covered long")
-        .orderBy("event_type", "window_days", "rank"))
+    return _result_frame(
+        spark, rows,
+        "event_type string, window_days int, rank int, "
+        "user_id long, cnt long, err long, n_covered long",
+        "event_type", "window_days", "rank")
 
 
 def q_eh_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2381,10 +2425,11 @@ def q_eh_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             est, err = sk[et].count_last(wd * day, now=tmax)
             rows.append((et, wd, int(round(est)), int(round(err)),
                          int(sk[et].n_buckets), int(sk[et].total)))
-    return (spark.createDataFrame(
-        rows, "event_type string, window_days int, est long, err long, "
-              "n_buckets long, total long")
-        .orderBy("event_type", "window_days"))
+    return _result_frame(
+        spark, rows,
+        "event_type string, window_days int, est long, err long, "
+        "n_buckets long, total long",
+        "event_type", "window_days")
 
 
 def q_ecm_window_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2419,9 +2464,10 @@ def q_ecm_window_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         est, err = sk.estimate(users, cutoff=tmax - wd * day)
         rows.extend((int(u), wd, int(round(e)), int(round(x)))
                     for u, e, x in zip(users, est, err))
-    return (spark.createDataFrame(
-        rows, "user_id long, window_days int, est long, err long")
-        .orderBy("user_id", "window_days"))
+    return _result_frame(
+        spark, rows,
+        "user_id long, window_days int, est long, err long",
+        "user_id", "window_days")
 
 
 def q_count_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2487,10 +2533,10 @@ def q_shll_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             regs = sk[et].to_hll(tmax - wd * day).registers.astype(np.int64)
             rows.append((et, wd, int((regs > 0).sum()),
                          int((weights * regs).sum())))
-    return (spark.createDataFrame(
-        rows, "event_type string, window_days int, "
-              "n_nonzero long, reg_checksum long")
-        .orderBy("event_type", "window_days"))
+    return _result_frame(
+        spark, rows,
+        "event_type string, window_days int, n_nonzero long, reg_checksum long",
+        "event_type", "window_days")
 
 
 def q_wdds_window_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2533,7 +2579,8 @@ def q_wdds_window_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 k_unsigned, est = _dds_key_est(merged, q, gamma)
                 rows.append((et, wh, float(q), k_unsigned, est,
                              int(merged.n)))
-    return (spark.createDataFrame(
-        rows, "event_type string, window_hours int, q double, "
-              "bucket_key long, estimate double, n long")
-        .orderBy("event_type", "window_hours", "q"))
+    return _result_frame(
+        spark, rows,
+        "event_type string, window_hours int, q double, "
+        "bucket_key long, estimate double, n long",
+        "event_type", "window_hours", "q")
